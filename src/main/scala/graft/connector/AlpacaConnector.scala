@@ -4,16 +4,17 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.types.UTF8String
 import org.slf4j.LoggerFactory
 
 import graft.core._
@@ -508,9 +509,8 @@ case class AlpacaScan(sourceDef: AlpacaSourceDef, cfg: AlpacaScanConfig,
       case Some(n) if n < cfg.limit => cfg.copy(limit = math.max(1, n))
       case _ => cfg
     }
-    // timeless sources answer with OBJECT records (one per symbol) —
-    // the vectorized walker is array-envelope-only, and at one row per
-    // symbol a ColumnarBatch buys nothing anyway: stay row-based
+    // timeless sources answer ONE object record per symbol: at one row
+    // per symbol a ColumnarBatch buys nothing, so they stay row-based
     new AlpacaReaderFactory(effectiveCfg, sourceDef.versionedPath,
       sourceDef.dataKey, sourceDef.parser, outSchema, limitOpt,
       columnar = !sourceDef.timeless,
@@ -520,29 +520,26 @@ case class AlpacaScan(sourceDef: AlpacaSourceDef, cfg: AlpacaScanConfig,
 
 class AlpacaReaderFactory(cfg: AlpacaScanConfig, pathElements: Seq[String],
     dataKey: String, parser: RecordParser,
-    outSchema: StructType = null,
+    outSchema: StructType,
     limitOpt: Option[Int] = None,
     columnar: Boolean = true,
     checkable: Boolean = false) extends PartitionReaderFactory {
 
-  private def schemaOut: StructType =
-    if (outSchema == null) parser.schema else outSchema
-
   /** Columnar hand-off (the reference's headline feature: one Arrow
     * RecordBatch per API page, `common.py:461-493`, README.md:15):
     * one ColumnarBatch per page, consumed by Spark's codegen'd
-    * ColumnarToRow. Batch reads only — the micro-batch stream stays
-    * row-based (stateful streaming plans don't consume columnar). */
+    * ColumnarToRow. Batch and micro-batch reads of the time-series
+    * sources alike; only the timeless sources read rows. */
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new AlpacaPartitionReader(cfg, pathElements, dataKey, parser,
-      partition.asInstanceOf[SymbolTimeRangePartition], schemaOut, limitOpt,
+      partition.asInstanceOf[SymbolTimeRangePartition], outSchema, limitOpt,
       checkable)
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new AlpacaColumnarPartitionReader(cfg, pathElements, dataKey, parser,
-      partition.asInstanceOf[SymbolTimeRangePartition], schemaOut, limitOpt,
+      partition.asInstanceOf[SymbolTimeRangePartition], outSchema, limitOpt,
       checkable)
 }
 
@@ -553,11 +550,12 @@ class AlpacaReaderFactory(cfg: AlpacaScanConfig, pathElements: Seq[String],
   * transient fault into wrong aggregates. */
 class ScanIntegrityException(msg: String) extends RuntimeException(msg)
 
-/** Shared executor-side page source: paginated HTTP fetch → JSON parse
-  * → per-page InternalRow iterators, fully pipelined (page at a time,
-  * SURVEY §2.3-2.4). Malformed records are warned and skipped (E4);
-  * HTTP failures after retries fail the Spark task (task retry covers
-  * the rest). */
+/** Shared executor-side page source: paginated HTTP fetch → one token
+  * walk per page (no page DOM, no char decode) → records decoded into
+  * column vectors or rows, fully pipelined (page at a time, SURVEY
+  * §2.3-2.4). Malformed records are skipped (E4) and reported in one
+  * summary WARN per partition; HTTP failures after retries fail the
+  * Spark task (task retry covers the rest). */
 private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
     pathElements: Seq[String], dataKey: String, parser: RecordParser,
     partition: SymbolTimeRangePartition, checkable: Boolean = false) {
@@ -589,33 +587,34 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
     if (check) parser.schema.fieldNames.indexOf("time") else -1
   private val desc = cfg.params.get("sort").exists(_.equalsIgnoreCase("desc"))
   private var pageRecords = 0L
-  private var curSymKey: AnyRef = null // reference identity of the symbol run
-  private var curSymStr: String = null
+  private var curSym: String = null // reference identity of the symbol run
   private var lastTs = 0L
   private var haveLast = false
   private lazy val lastBySym = scala.collection.mutable.HashMap[String, Long]()
   private var pagesVerified = 0L
 
-  private def flushRun(): Unit =
-    if (curSymStr != null && haveLast) lastBySym.update(curSymStr, lastTs)
+  // malformed records skipped so far in this partition, and the first
+  // one's reason, for the summary WARN
+  private var skipped = 0L
+  private var firstSkip: String = null
 
-  /** Ordering invariant for one record instant. `symRef` is the
-    * per-symbol-run key object (one allocation per envelope run, so
-    * the hot path is a reference compare); `symStr` materializes the
-    * symbol only on a run switch. */
-  private def checkInstant(symRef: AnyRef, symStr: => String, ts: Long): Unit = {
-    if (symRef ne curSymKey) {
+  private def flushRun(): Unit =
+    if (curSym != null && haveLast) lastBySym.update(curSym, lastTs)
+
+  /** Ordering invariant for one record instant. `sym` is the walk's
+    * per-run symbol string, so the hot path is a reference compare. */
+  private def checkInstant(sym: String, ts: Long): Unit = {
+    if (sym ne curSym) {
       flushRun()
-      curSymKey = symRef
-      curSymStr = symStr
-      haveLast = lastBySym.get(curSymStr) match {
+      curSym = sym
+      haveLast = lastBySym.get(sym) match {
         case Some(t) => lastTs = t; true
         case None => false
       }
     }
     if (haveLast && (if (desc) ts > lastTs else ts < lastTs))
       throw new ScanIntegrityException(
-        s"out-of-order instant for symbol '$curSymStr' in partition " +
+        s"out-of-order instant for symbol '$curSym' in partition " +
           s"'${partition.symbol}' [${partition.startMicros},${partition.endMicros}) " +
           s"page ${pagesVerified + 1}: $ts after $lastTs with sort=" +
           (if (desc) "desc" else "asc") +
@@ -625,7 +624,7 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
   }
 
   /** Count invariant at end of one page's parse. */
-  private[connector] def verifyPageCount(expected: Long): Unit = {
+  private def verifyPageCount(expected: Long): Unit = {
     if (check && pageRecords != expected)
       throw new ScanIntegrityException(
         s"page record-count mismatch in partition '${partition.symbol}' " +
@@ -651,12 +650,6 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
     overridden.toSeq.sortBy(_._1)
   }
 
-  /** One row array per API page (page-lazy with one page of async
-    * lookahead: the NEXT page's HTTP request is in flight while the
-    * current page parses). Each page streams token-by-token from raw
-    * bytes straight to rows — no page DOM, no char decode — the
-    * Spark-side analogue of the reference's JSON→Arrow batch seam
-    * (`common.py:461-493`). */
   private lazy val client = new AlpacaHttpClient(
     cfg.endpoint,
     Map(
@@ -668,162 +661,156 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
     readTimeoutSec = cfg.timeoutSec,
     rateLimitRps = cfg.rateLimitRps)
 
-  /** Raw page bodies with the skim's independent record count
-    * (prefetched one ahead). */
+  /** Raw page bodies with the skim's independent record count, page-lazy
+    * with one page of async lookahead: the NEXT page's HTTP request is
+    * in flight while the current page parses — the Spark-side analogue
+    * of the reference's JSON→Arrow batch seam (`common.py:461-493`). */
   lazy val countedPages: Iterator[AlpacaHttpClient.FetchedPage] =
     client.fetchAllPagesCounted(partitionParams, cfg.rateLimitDelaySec)
 
-  /** Raw page bodies (prefetched one ahead). */
-  lazy val rawPages: Iterator[Array[Byte]] = countedPages.map(_.bytes)
-
-  lazy val pageArrays: Iterator[Array[InternalRow]] = countedPages.map { p =>
-    val rows = parsePageBytes(p.bytes)
-    verifyPageCount(p.arrayRecordCount)
-    rows
+  /** One row array per page: the row reader, and the columnar reader
+    * for parsers without a vector walk. */
+  lazy val rowPages: Iterator[Array[InternalRow]] = countedPages.map { p =>
+    val sink = new RowSink
+    walkPage(p, sink)
+    sink.rows.toArray
   }
 
-  lazy val pages: Iterator[Iterator[InternalRow]] = pageArrays.map(_.iterator)
-
-  private def parsePageBytes(bytes: Array[Byte]): Array[InternalRow] = {
-    import com.fasterxml.jackson.core.JsonToken
-    if (check) pageRecords = 0L
-    val jp = AlpacaPageSource.mapper.createParser(bytes)
-    try {
-      val out = new scala.collection.mutable.ArrayBuffer[InternalRow](
-        math.min(cfg.limit, 16384))
-      if (jp.nextToken() != JsonToken.START_OBJECT) return Array.empty
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        tk = jp.nextToken()
-        if (name == dataKey && tk == JsonToken.START_OBJECT) {
-          var t2 = jp.nextToken()
-          while (t2 == JsonToken.FIELD_NAME) {
-            val sym = jp.currentName()
-            t2 = jp.nextToken()
-            if (t2 == JsonToken.START_ARRAY) {
-              // integrity: one sink per symbol run — `sym` doubles as
-              // the run-identity key for the ordering invariant
-              val sink: InternalRow => Unit =
-                if (check && timeOrdinal >= 0) { r =>
-                  checkInstant(sym, sym, r.getLong(timeOrdinal)); out += r
-                } else out += _
-              var t3 = jp.nextToken()
-              while (t3 != JsonToken.END_ARRAY) {
-                if (t3 == JsonToken.START_OBJECT) {
-                  if (check) pageRecords += 1
-                  // parseStreamMulti: 1:1 for every source except the
-                  // fan-out shapes (auctions: daily record → N prints)
-                  try parser.parseStreamMulti(sym, jp, sink)
-                  catch {
-                    case e: IllegalArgumentException =>
-                      log.warn(s"Skipping malformed record for $sym: ${e.getMessage}")
-                  }
-                } else if (t3.isStructStart) jp.skipChildren()
-                t3 = jp.nextToken()
-              }
-            } else if (t2 == JsonToken.START_OBJECT) {
-              // per-symbol OBJECT value (snapshots): the symbol’s value
-              // IS the single record, not an array of them
-              try parser.parseStreamMulti(sym, jp, out += _)
-              catch {
-                case e: IllegalArgumentException =>
-                  log.warn(s"Skipping malformed record for $sym: ${e.getMessage}")
-              }
-            } else if (t2.isStructStart) jp.skipChildren()
-            t2 = jp.nextToken()
-          }
-        } else if (dataKey.isEmpty && name != "next_page_token" &&
-            tk == JsonToken.START_OBJECT) {
-          // BARE symbol-keyed envelope (snapshots): there is no data
-          // key at all — every top-level field IS a symbol and its
-          // OBJECT value is that symbol's single record
-          try parser.parseStreamMulti(name, jp, out += _)
-          catch {
-            case e: IllegalArgumentException =>
-              log.warn(s"Skipping malformed record for $name: ${e.getMessage}")
-          }
-        } else if (name == dataKey && tk == JsonToken.START_ARRAY) {
-          // FLAT envelope (the news endpoint): records arrive in one
-          // un-keyed array — the partition's own symbol is the `symbol`
-          // column (cross-listed articles arrive once per requested
-          // symbol; consumers dedup by id)
-          var t3 = jp.nextToken()
-          while (t3 != JsonToken.END_ARRAY) {
-            if (t3 == JsonToken.START_OBJECT) {
-              try parser.parseStreamMulti(partition.symbol, jp, out += _)
-              catch {
-                case e: IllegalArgumentException =>
-                  log.warn(s"Skipping malformed record for ${partition.symbol}: " +
-                    e.getMessage)
-              }
-            } else if (t3.isStructStart) jp.skipChildren()
-            t3 = jp.nextToken()
-          }
-        } else if (tk != null && tk.isStructStart) jp.skipChildren()
-        tk = jp.nextToken()
-      }
-      out.toArray
-    } finally jp.close()
+  /** Decodes one page straight into the (reused) column vectors — no
+    * InternalRow, no boxing — and returns the row count written.
+    * Records past `maxRows` are lex-skipped so the token stream stays
+    * aligned with pagination. */
+  def pageIntoVectors(page: AlpacaHttpClient.FetchedPage, vp: VectorWriteSupport,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], maxRows: Int): Int = {
+    val sink = new VectorSink(vp, vecs, fieldToOut, maxRows)
+    walkPage(page, sink)
+    sink.count
   }
 
-  /** Vectorized twin of parsePageBytes: records decode straight into
-    * the (reused) column vectors — no InternalRow, no boxing. Returns
-    * the row count written; records past `maxRows` are lex-skipped so
-    * the token stream stays aligned with pagination. */
-  def parsePageIntoVectors(bytes: Array[Byte], vp: graft.core.VectorWriteSupport,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], maxRows: Int): Int = {
-    import com.fasterxml.jackson.core.JsonToken
-    if (check) pageRecords = 0L
-    // ordering invariant needs the instant read back from its output
+  /** One WARN per partition for its malformed-record skips — the count
+    * and the first reason — instead of one per record. The readers
+    * call it when they close. */
+  def logSkipped(): Unit =
+    if (skipped > 0) {
+      log.warn(s"Skipped $skipped malformed record(s) in partition '${partition.symbol}' " +
+        s"[${partition.startMicros},${partition.endMicros}); first: $firstSkip")
+      skipped = 0
+    }
+
+  /** Where the walk's records land. */
+  private abstract class Sink {
+    /** Symbol of the records that follow, set once per symbol run. */
+    def symbol(sym: String): Unit
+    /** Decodes the record the parser is ON (START_OBJECT → END_OBJECT);
+      * for a malformed record throws IllegalArgumentException with
+      * nothing emitted. */
+    def record(jp: JsonParser): Unit
+    /** Past a pushed limit: records are lex-skipped, not decoded. */
+    def full: Boolean = false
+    /** Whether [[instant]] feeds the ordering invariant. */
+    def timed: Boolean
+    /** Instant of the record just decoded. */
+    def instant: Long
+  }
+
+  private final class RowSink extends Sink {
+    val rows = new scala.collection.mutable.ArrayBuffer[InternalRow](
+      math.min(cfg.limit, 16384))
+    private val add: InternalRow => Unit = rows += _
+    private var sym: String = _
+    def symbol(s: String): Unit = sym = s
+    // parseStreamMulti: 1:1 for every source except the fan-out
+    // shapes (auctions, orderbooks), which are not integrity-checked
+    def record(jp: JsonParser): Unit = parser.parseStreamMulti(sym, jp, add)
+    val timed: Boolean = timeOrdinal >= 0
+    def instant: Long = rows.last.getLong(timeOrdinal)
+  }
+
+  private final class VectorSink(vp: VectorWriteSupport,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], maxRows: Int)
+    extends Sink {
+    var count = 0
+    private var sym: UTF8String = _
+    // the ordering invariant reads the instant back from its output
     // vector; a scan that pruned `time` away keeps the count invariant
     // only (the analytic time-series queries this protects always
     // project time)
-    val timeOut = if (check && timeOrdinal >= 0) fieldToOut(timeOrdinal) else -1
-    val jp = AlpacaPageSource.mapper.createParser(bytes)
-    var count = 0
+    private val timeOut = if (timeOrdinal >= 0) fieldToOut(timeOrdinal) else -1
+    def symbol(s: String): Unit = sym = UTF8String.fromString(s)
+    override def full: Boolean = count >= maxRows
+    def record(jp: JsonParser): Unit = {
+      var i = 0
+      while (i < vecs.length) { vecs(i).reserve(count + 1); i += 1 }
+      vp.parseIntoVectors(sym, jp, vecs, fieldToOut, count)
+      count += 1
+    }
+    val timed: Boolean = timeOut >= 0
+    def instant: Long = vecs(timeOut).getLong(count - 1)
+  }
+
+  /** The one envelope walk, then the page's count invariant. Shapes:
+    *  - keyed: `dataKey` maps each symbol to an ARRAY of records (the
+    *    time series) or to ONE record object (the latest sources);
+    *  - bare keyed (empty `dataKey`, snapshots): every top-level field
+    *    is a symbol and its OBJECT value that symbol's record;
+    *  - flat (news): `dataKey` holds one un-keyed array, whose records
+    *    take the partition's own symbol (cross-listed articles arrive
+    *    once per requested symbol; consumers dedup by id). */
+  private def walkPage(page: AlpacaHttpClient.FetchedPage, sink: Sink): Unit = {
+    if (check) pageRecords = 0L
+    val jp = AlpacaPageSource.mapper.createParser(page.bytes)
     try {
-      if (jp.nextToken() != JsonToken.START_OBJECT) return 0
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        tk = jp.nextToken()
-        if (name == dataKey && tk == JsonToken.START_OBJECT) {
-          var t2 = jp.nextToken()
-          while (t2 == JsonToken.FIELD_NAME) {
-            val sym = org.apache.spark.unsafe.types.UTF8String.fromString(jp.currentName())
-            t2 = jp.nextToken()
-            if (t2 == JsonToken.START_ARRAY) {
-              var t3 = jp.nextToken()
-              while (t3 != JsonToken.END_ARRAY) {
-                if (t3 == JsonToken.START_OBJECT) {
-                  if (check) pageRecords += 1
-                  if (count >= maxRows) jp.skipChildren()
-                  else {
-                    var i = 0
-                    while (i < vecs.length) { vecs(i).reserve(count + 1); i += 1 }
-                    try {
-                      vp.parseIntoVectors(sym, jp, vecs, fieldToOut, count)
-                      if (timeOut >= 0)
-                        checkInstant(sym, sym.toString, vecs(timeOut).getLong(count))
-                      count += 1
-                    } catch {
-                      case e: IllegalArgumentException =>
-                        log.warn(s"Skipping malformed record for $sym: ${e.getMessage}")
-                    }
-                  }
-                } else if (t3.isStructStart) jp.skipChildren()
-                t3 = jp.nextToken()
-              }
-            } else if (t2.isStructStart) jp.skipChildren()
-            t2 = jp.nextToken()
-          }
-        } else if (tk != null && tk.isStructStart) jp.skipChildren()
-        tk = jp.nextToken()
+      if (jp.nextToken() == JsonToken.START_OBJECT) {
+        var tk = jp.nextToken()
+        while (tk == JsonToken.FIELD_NAME) {
+          val name = jp.currentName()
+          tk = jp.nextToken()
+          if (name == dataKey && tk == JsonToken.START_OBJECT) {
+            while (jp.nextToken() == JsonToken.FIELD_NAME) {
+              val sym = jp.currentName()
+              sink.symbol(sym)
+              val t = jp.nextToken()
+              if (t == JsonToken.START_ARRAY) records(jp, sym, sink)
+              else if (t == JsonToken.START_OBJECT) record(jp, sym, sink)
+            }
+          } else if (name == dataKey && tk == JsonToken.START_ARRAY) {
+            sink.symbol(partition.symbol)
+            records(jp, partition.symbol, sink)
+          } else if (dataKey.isEmpty && name != "next_page_token" &&
+              tk == JsonToken.START_OBJECT) {
+            sink.symbol(name)
+            record(jp, name, sink)
+          } else if (tk != null && tk.isStructStart) jp.skipChildren()
+          tk = jp.nextToken()
+        }
       }
-      count
     } finally jp.close()
+    verifyPageCount(page.arrayRecordCount)
+  }
+
+  /** The records of one array; the parser is ON its START_ARRAY. */
+  private def records(jp: JsonParser, sym: String, sink: Sink): Unit = {
+    var t = jp.nextToken()
+    while (t != JsonToken.END_ARRAY) {
+      if (t == JsonToken.START_OBJECT) record(jp, sym, sink)
+      else if (t.isStructStart) jp.skipChildren()
+      t = jp.nextToken()
+    }
+  }
+
+  /** The one record site: count it, decode it, check its instant — or
+    * skip it as malformed (E4). */
+  private def record(jp: JsonParser, sym: String, sink: Sink): Unit = {
+    if (check) pageRecords += 1
+    if (sink.full) jp.skipChildren()
+    else try {
+      sink.record(jp)
+      if (sink.timed) checkInstant(sym, sink.instant)
+    } catch {
+      case e: IllegalArgumentException =>
+        skipped += 1
+        if (firstSkip == null) firstSkip = s"record for $sym: ${e.getMessage}"
+    }
   }
 }
 
@@ -833,8 +820,9 @@ private[connector] object AlpacaPageSource {
   val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 }
 
-/** Row-at-a-time reader (micro-batch streaming path; batch reads go
-  * through the columnar reader below). */
+/** Row-at-a-time reader for the timeless sources (snapshots, latest,
+  * orderbooks, screeners: one record per symbol); time-series reads,
+  * batch and micro-batch, go through the columnar reader below. */
 class AlpacaPartitionReader(cfg: AlpacaScanConfig, pathElements: Seq[String],
     dataKey: String, parser: RecordParser, partition: SymbolTimeRangePartition,
     outSchema: StructType, limitOpt: Option[Int] = None,
@@ -850,9 +838,10 @@ class AlpacaPartitionReader(cfg: AlpacaScanConfig, pathElements: Seq[String],
 
   private var emitted = 0L
 
-  private lazy val rows: Iterator[InternalRow] =
+  private val pageSource =
     new AlpacaPageSource(cfg, pathElements, dataKey, parser, partition, checkable)
-      .pages.flatten
+
+  private lazy val rows: Iterator[InternalRow] = pageSource.rowPages.flatMap(_.iterator)
 
   private var current: InternalRow = _
   override def next(): Boolean =
@@ -868,7 +857,7 @@ class AlpacaPartitionReader(cfg: AlpacaScanConfig, pathElements: Seq[String],
       true
     } else false
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = pageSource.logSkipped()
 }
 
 /** Columnar reader: one ColumnarBatch per API page — the Spark-native
@@ -895,10 +884,8 @@ class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
     m
   }
 
-  private lazy val pageSource =
+  private val pageSource =
     new AlpacaPageSource(cfg, pathElements, dataKey, parser, partition, checkable)
-
-  private lazy val pages: Iterator[Array[InternalRow]] = pageSource.pageArrays
 
   private var emitted = 0L
   private var batch: ColumnarBatch = _
@@ -908,13 +895,13 @@ class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
   private var reusedVecs: Array[OnHeapColumnVector] = _
 
   override def next(): Boolean = parser match {
-    case vp: graft.core.VectorWriteSupport => nextVectorized(vp)
+    case vp: VectorWriteSupport => nextVectorized(vp)
     case _ => nextRowFill()
   }
 
   /** Direct decode: HTTP bytes → Jackson tokens → column vectors.
     * No InternalRow or boxed field values exist on this path. */
-  private def nextVectorized(vp: graft.core.VectorWriteSupport): Boolean = {
+  private def nextVectorized(vp: VectorWriteSupport): Boolean = {
     if (limitOpt.exists(emitted >= _)) return false
     if (reusedVecs == null) {
       reusedVecs = OnHeapColumnVector.allocateColumns(
@@ -928,10 +915,8 @@ class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
       var i = 0
       while (i < reusedVecs.length) { reusedVecs(i).reset(); i += 1 }
       val maxRows = limitOpt.map(l => (l - emitted).toInt).getOrElse(Int.MaxValue)
-      val n = pageSource.parsePageIntoVectors(page.bytes, vp, reusedVecs
-        .asInstanceOf[Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector]],
-        fieldToOut, maxRows)
-      pageSource.verifyPageCount(page.arrayRecordCount)
+      val n = pageSource.pageIntoVectors(page, vp,
+        reusedVecs.asInstanceOf[Array[WritableColumnVector]], fieldToOut, maxRows)
       if (n > 0) {
         batch.setNumRows(n)
         emitted += n
@@ -942,8 +927,9 @@ class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
   }
 
   private def nextRowFill(): Boolean = {
-    close() // release the previous page's vectors
+    releaseBatch() // the previous page's vectors
     if (limitOpt.exists(emitted >= _)) return false
+    val pages = pageSource.rowPages
     while (pages.hasNext) {
       var rows = pages.next()
       limitOpt.foreach { lim =>
@@ -986,7 +972,9 @@ class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
     new ColumnarBatch(vecs.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]], rows.length)
   }
 
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit =
+  private def releaseBatch(): Unit =
     if (batch != null) { batch.close(); batch = null }
+
+  override def get(): ColumnarBatch = batch
+  override def close(): Unit = { releaseBatch(); pageSource.logSkipped() }
 }

@@ -1,7 +1,9 @@
 package graft.core
 
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -152,7 +154,10 @@ object Schemas {
 /** Per-record projection of an API JSON object into an InternalRow
   * (the reference's only expression evaluation, SURVEY §2.4 E1-E3).
   * Throws IllegalArgumentException on malformed records; the reader
-  * warns + skips (E4, `common.py:484-486`). */
+  * warns + skips (E4, `common.py:484-486`). The flat time-series
+  * parsers decode through one token walk ([[VectorWriteSupport]]); the
+  * cold sources (news, corporate actions, auctions, snapshots,
+  * orderbooks, screeners) implement [[parse]] over a record DOM. */
 trait RecordParser extends Serializable {
   def schema: StructType
   def parse(symbol: String, rec: JsonNode): InternalRow
@@ -160,11 +165,12 @@ trait RecordParser extends Serializable {
   /** Streaming parse of one record: the parser must be positioned ON
     * the record's START_OBJECT and, on success, is left ON its
     * END_OBJECT. Default materializes just this record's subtree and
-    * delegates to [[parse]] — hot sources override with a token walk
-    * (no DOM at all). On failure the token stream is realigned to the
-    * record's END_OBJECT before rethrowing, so the caller can warn +
-    * skip and continue with the next record (E4 semantics). */
-  def parseStream(symbol: String, jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
+    * delegates to [[parse]]; [[VectorWriteSupport]] parsers run their
+    * token walk instead (no DOM at all). On failure the token stream
+    * is realigned to the record's END_OBJECT before rethrowing, so the
+    * caller can warn + skip and continue with the next record (E4
+    * semantics). */
+  def parseStream(symbol: String, jp: JsonParser): InternalRow = {
     val node = jp.readValueAsTree[JsonNode]()
     parse(symbol, node)
   }
@@ -175,34 +181,33 @@ trait RecordParser extends Serializable {
     * contract as parseStream; on failure NOTHING may have been emitted
     * via `out` (validate the whole record before the first emit) so
     * the caller's warn+skip drops the record atomically. */
-  def parseStreamMulti(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser,
+  def parseStreamMulti(symbol: String, jp: JsonParser,
       out: InternalRow => Unit): Unit =
     out(parseStream(symbol, jp))
 
   /** Realign to the current record's END_OBJECT after a mid-record
     * failure (value tokens already consumed are scalars; an
     * unconsumed struct value is skipped wholesale). */
-  protected final def skipRecord(jp: com.fasterxml.jackson.core.JsonParser): Unit = {
+  protected final def skipRecord(jp: JsonParser): Unit = {
     try {
       var tk = jp.currentToken()
       if (tk != null && tk.isStructStart) jp.skipChildren()
       tk = jp.nextToken()
-      while (tk != null && tk != com.fasterxml.jackson.core.JsonToken.END_OBJECT) {
+      while (tk != null && tk != JsonToken.END_OBJECT) {
         if (tk.isStructStart) jp.skipChildren()
         tk = jp.nextToken()
       }
     } catch { case _: java.io.IOException => () }
   }
 
-  protected final def streamTs(jp: com.fasterxml.jackson.core.JsonParser, key: String): Long = {
+  protected final def streamTs(jp: JsonParser, key: String): Long = {
     val raw = jp.getText
     AlpacaOptions.parseIsoMicros(raw).getOrElse(
       throw new IllegalArgumentException(s"bad timestamp '$raw' in '$key'"))
   }
 
-  protected final def streamDbl(jp: com.fasterxml.jackson.core.JsonParser, key: String): Double = {
-    import com.fasterxml.jackson.core.JsonToken._
+  protected final def streamDbl(jp: JsonParser, key: String): Double = {
+    import JsonToken._
     jp.currentToken() match {
       case VALUE_NUMBER_INT | VALUE_NUMBER_FLOAT => jp.getDoubleValue
       case VALUE_STRING =>
@@ -213,8 +218,8 @@ trait RecordParser extends Serializable {
     }
   }
 
-  protected final def streamLng(jp: com.fasterxml.jackson.core.JsonParser, key: String): Long = {
-    import com.fasterxml.jackson.core.JsonToken._
+  protected final def streamLng(jp: JsonParser, key: String): Long = {
+    import JsonToken._
     jp.currentToken() match {
       case VALUE_NUMBER_INT => jp.getLongValue
       case VALUE_NUMBER_FLOAT => jp.getDoubleValue.toLong
@@ -225,6 +230,40 @@ trait RecordParser extends Serializable {
       case _ => throw new IllegalArgumentException(s"bad long in '$key'")
     }
   }
+
+  /** A string field's value. An object or array where a string belongs
+    * makes the record malformed: the throw lands in the walk's catch,
+    * whose [[skipRecord]] skips the value and realigns to the record's
+    * END_OBJECT — the struct's insides are never read as fields of the
+    * record. */
+  protected final def streamStr(jp: JsonParser, key: String): String =
+    if (jp.currentToken().isStructStart)
+      throw new IllegalArgumentException(s"bad string (object or array) in '$key'")
+    else jp.getText
+
+  /** The condition-code array joined to CSV (`",".join(c)`,
+    * `stocks/trades.py:128`); a value that is not an array reads as no
+    * conditions, like an absent key. */
+  protected final def streamCsv(jp: JsonParser, key: String): String =
+    if (jp.currentToken() != JsonToken.START_ARRAY) {
+      if (jp.currentToken().isStructStart) jp.skipChildren()
+      ""
+    } else {
+      val sb = new java.lang.StringBuilder
+      while (jp.nextToken() != JsonToken.END_ARRAY) {
+        if (sb.length > 0) sb.append(',')
+        sb.append(streamStr(jp, key))
+      }
+      sb.toString
+    }
+
+  /** Completeness gate of a token walk: bit i of `seen` is set once
+    * `names(i)` was read (null reads as absent); the lowest clear bit
+    * names the missing field. */
+  protected final def requireAll(seen: Int, names: Array[String]): Unit =
+    if (seen != (1 << names.length) - 1)
+      throw new IllegalArgumentException(
+        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
 
   protected def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
@@ -256,26 +295,47 @@ trait RecordParser extends Serializable {
   }
 }
 
-/** Direct token→vector decode: implemented by parsers whose records
-  * can be written straight into a ColumnarBatch's vectors with no
-  * InternalRow (and no boxing) in between — the end state of the
-  * scan path: HTTP bytes → Jackson tokens → column vectors →
+/** Direct token→vector decode, the one record walk of the flat
+  * time-series parsers: records are written straight into a
+  * ColumnarBatch's vectors with no InternalRow (and no boxing) in
+  * between — HTTP bytes → Jackson tokens → column vectors →
   * codegen'd ColumnarToRow. Contract mirrors [[RecordParser.parseStream]]:
   * enter ON the record's START_OBJECT, leave ON its END_OBJECT, and
   * realign before rethrowing so the caller can warn+skip. On failure
   * the row slot may hold partial values — the caller must not advance
-  * the row index, so the next record overwrites it. */
-trait VectorWriteSupport { self: RecordParser =>
+  * the row index, so the next record overwrites it. The row entry
+  * points ([[parse]], [[parseStream]]) run the same walk. */
+trait VectorWriteSupport extends RecordParser {
   /** @param fieldToOut output-vector ordinal for each field of
     *   [[RecordParser.schema]] (−1 = pruned away). `vecs` is indexed
     *   by those output ordinals. */
-  def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit
+  def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit
 
-  protected final def putStr(
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
+  /** One record through [[parseIntoVectors]] into a one-row scratch,
+    * copied out as an InternalRow. The scratch is allocated per call
+    * because the parser objects are shared across tasks; only the row
+    * paths pay for it — the `*_Latest` sources (one row per symbol). */
+  final override def parseStream(symbol: String, jp: JsonParser): InternalRow = {
+    val vecs = OnHeapColumnVector.allocateColumns(1, schema)
+    parseIntoVectors(utf8(symbol), jp, vecs.asInstanceOf[Array[WritableColumnVector]],
+      Array.range(0, schema.length), 0)
+    InternalRow.fromSeq(schema.fields.indices.map { i =>
+      schema(i).dataType match {
+        case StringType => vecs(i).getUTF8String(0)
+        case DoubleType => vecs(i).getDouble(0)
+        case _ => vecs(i).getLong(0) // TIMESTAMP, BIGINT
+      }
+    })
+  }
+
+  /** The DOM entry point, through the same walk. */
+  final override def parse(symbol: String, rec: JsonNode): InternalRow = {
+    val jp = rec.traverse()
+    try { jp.nextToken(); parseStream(symbol, jp) } finally jp.close()
+  }
+
+  protected final def putStr(vecs: Array[WritableColumnVector],
       out: Int, row: Int, s: UTF8String): Unit =
     if (out >= 0) {
       val b = s.getBytes
@@ -286,60 +346,15 @@ trait VectorWriteSupport { self: RecordParser =>
 /** `{t,o,h,l,c,v,n,vw}` → bar row (reference: `bars.py:199-225`). */
 object BarParser extends RecordParser with VectorWriteSupport {
   override val schema: StructType = Schemas.bars
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      dbl(rec, "o"), dbl(rec, "h"), dbl(rec, "l"), dbl(rec, "c"),
-      lng(rec, "v"), lng(rec, "n"),
-      dbl(rec, "vw"))
 
-  /** Token walk — no per-record DOM. A null or absent field surfaces
-    * as the same missing-field error the DOM path raises. */
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L
-    var o = 0d; var h = 0d; var l = 0d; var c = 0d; var vw = 0d
-    var v = 0L; var n = 0L
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) () // same as absent
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "o" => o = streamDbl(jp, "o"); seen |= 2
-          case "h" => h = streamDbl(jp, "h"); seen |= 4
-          case "l" => l = streamDbl(jp, "l"); seen |= 8
-          case "c" => c = streamDbl(jp, "c"); seen |= 16
-          case "v" => v = streamLng(jp, "v"); seen |= 32
-          case "n" => n = streamLng(jp, "n"); seen |= 64
-          case "vw" => vw = streamDbl(jp, "vw"); seen |= 128
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != 255) {
-      val names = Array("t", "o", "h", "l", "c", "v", "n", "vw")
-      throw new IllegalArgumentException(
-        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
-    }
-    InternalRow(utf8(symbol), tUs, o, h, l, c, v, n, vw)
-  }
+  private val FieldNames = Array("t", "o", "h", "l", "c", "v", "n", "vw")
 
-  /** Same walk as parseStream, values landing in the vectors.
-    * Numeric/timestamp fields write through immediately (a failed
-    * record's partial writes are overwritten when the slot is
-    * reused); the seen-mask still gates completeness. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
+  /** Numeric/timestamp fields write through immediately (a failed
+    * record's partial writes are overwritten when the slot is reused);
+    * the seen-mask gates completeness, so a null or absent field is a
+    * missing-field error. */
+  override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
     def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
     def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var seen = 0
@@ -363,11 +378,7 @@ object BarParser extends RecordParser with VectorWriteSupport {
         tk = jp.nextToken()
       }
     } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != 255) {
-      val names = Array("t", "o", "h", "l", "c", "v", "n", "vw")
-      throw new IllegalArgumentException(
-        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
-    }
+    requireAll(seen, FieldNames)
     putStr(vecs, fieldToOut(0), row, symbol)
   }
 }
@@ -377,85 +388,15 @@ object BarParser extends RecordParser with VectorWriteSupport {
   * join at `:128`). */
 object TradeParser extends RecordParser with VectorWriteSupport {
   override val schema: StructType = Schemas.trades
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val condNode = rec.get("c")
-    val conditions =
-      if (condNode == null || condNode.isNull) ""
-      else {
-        val it = condNode.elements()
-        val sb = new StringBuilder
-        while (it.hasNext) {
-          if (sb.nonEmpty) sb.append(',')
-          sb.append(it.next().asText())
-        }
-        sb.toString
-      }
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      utf8(reqNode(rec, "x").asText()),
-      dbl(rec, "p"),
-      lng(rec, "s"),
-      utf8(conditions),
-      lng(rec, "i"),
-      utf8(reqNode(rec, "z").asText()))
-  }
 
-  /** Token walk; the `c` condition array is joined to CSV in-stream
-    * (absent/null `c` → empty string, like the DOM path). */
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var p = 0d; var s = 0L; var id = 0L
-    var x: String = null; var z: String = null
-    var conditions = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) () // absent/null → default or missing
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "x" => x = jp.getText; seen |= 2
-          case "p" => p = streamDbl(jp, "p"); seen |= 4
-          case "s" => s = streamLng(jp, "s"); seen |= 8
-          case "i" => id = streamLng(jp, "i"); seen |= 16
-          case "z" => z = jp.getText; seen |= 32
-          case "c" =>
-            if (vt == JsonToken.START_ARRAY) {
-              val sb = new java.lang.StringBuilder
-              var t2 = jp.nextToken()
-              while (t2 != JsonToken.END_ARRAY) {
-                if (sb.length > 0) sb.append(',')
-                sb.append(jp.getText)
-                t2 = jp.nextToken()
-              }
-              conditions = sb.toString
-            } else if (vt.isStructStart) jp.skipChildren()
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != 63) {
-      val names = Array("t", "x", "p", "s", "i", "z")
-      throw new IllegalArgumentException(
-        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
-    }
-    InternalRow(utf8(symbol), tUs, utf8(x), p, s, utf8(conditions), id, utf8(z))
-  }
+  private val FieldNames = Array("t", "x", "p", "s", "i", "z")
 
-  /** Vector twin of the token walk. Strings are held in locals and
-    * written only after the record validates, so failed records leave
-    * no bytes in the string vectors' child buffers. Schema order:
+  /** Strings are held in locals and written only after the record
+    * validates, so failed records leave no bytes in the string vectors'
+    * child buffers. Absent/null `c` → empty string. Schema order:
     * symbol, time, exchange, price, size, conditions, id, tape. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
+  override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
     def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
     def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var x: String = null; var z: String = null
@@ -466,35 +407,21 @@ object TradeParser extends RecordParser with VectorWriteSupport {
       while (tk == JsonToken.FIELD_NAME) {
         val name = jp.currentName()
         val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
+        if (vt == JsonToken.VALUE_NULL) () // absent/null → default or missing
         else name match {
           case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "x" => x = jp.getText; seen |= 2
+          case "x" => x = streamStr(jp, "x"); seen |= 2
           case "p" => putD(fieldToOut(3), streamDbl(jp, "p")); seen |= 4
           case "s" => putL(fieldToOut(4), streamLng(jp, "s")); seen |= 8
           case "i" => putL(fieldToOut(6), streamLng(jp, "i")); seen |= 16
-          case "z" => z = jp.getText; seen |= 32
-          case "c" =>
-            if (vt == JsonToken.START_ARRAY) {
-              val sb = new java.lang.StringBuilder
-              var t2 = jp.nextToken()
-              while (t2 != JsonToken.END_ARRAY) {
-                if (sb.length > 0) sb.append(',')
-                sb.append(jp.getText)
-                t2 = jp.nextToken()
-              }
-              conditions = sb.toString
-            } else if (vt.isStructStart) jp.skipChildren()
+          case "z" => z = streamStr(jp, "z"); seen |= 32
+          case "c" => conditions = streamCsv(jp, "c")
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
       }
     } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != 63) {
-      val names = Array("t", "x", "p", "s", "i", "z")
-      throw new IllegalArgumentException(
-        s"missing field '${names(Integer.numberOfTrailingZeros(~seen))}'")
-    }
+    requireAll(seen, FieldNames)
     putStr(vecs, fieldToOut(0), row, symbol)
     putStr(vecs, fieldToOut(2), row, utf8(x))
     putStr(vecs, fieldToOut(5), row, utf8(conditions))
@@ -505,59 +432,17 @@ object TradeParser extends RecordParser with VectorWriteSupport {
 /** `{t,p,s,i,tks}` → crypto trade row (public Alpaca v1beta3 crypto
   * record shape; no reference code exists to mirror —
   * `crypto/__init__.py:1` is empty). `s` stays a DOUBLE (fractional
-  * sizes), `tks` is the taker side. Token-walk + vector paths follow
-  * the stock TradeParser pattern exactly. */
+  * sizes), `tks` is the taker side. Same walk discipline as the stock
+  * TradeParser. */
 object CryptoTradeParser extends RecordParser with VectorWriteSupport {
   override val schema: StructType = Schemas.cryptoTrades
 
   private val FieldNames = Array("t", "p", "s", "i", "tks")
-  private val AllSeen = 31
 
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      dbl(rec, "p"),
-      dbl(rec, "s"),
-      lng(rec, "i"),
-      utf8(reqNode(rec, "tks").asText()))
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var p = 0d; var s = 0d; var id = 0L
-    var tks: String = null
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "p" => p = streamDbl(jp, "p"); seen |= 2
-          case "s" => s = streamDbl(jp, "s"); seen |= 4
-          case "i" => id = streamLng(jp, "i"); seen |= 8
-          case "tks" => tks = jp.getText; seen |= 16
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, p, s, id, utf8(tks))
-  }
-
-  /** Vector twin. Schema order: symbol, time, price, size, id,
-    * taker_side; strings written only after the record validates. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
+  /** Schema order: symbol, time, price, size, id, taker_side; strings
+    * written only after the record validates. */
+  override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
     def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
     def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var tks: String = null
@@ -573,15 +458,13 @@ object CryptoTradeParser extends RecordParser with VectorWriteSupport {
           case "p" => putD(fieldToOut(2), streamDbl(jp, "p")); seen |= 2
           case "s" => putD(fieldToOut(3), streamDbl(jp, "s")); seen |= 4
           case "i" => putL(fieldToOut(4), streamLng(jp, "i")); seen |= 8
-          case "tks" => tks = jp.getText; seen |= 16
+          case "tks" => tks = streamStr(jp, "tks"); seen |= 16
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
       }
     } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
+    requireAll(seen, FieldNames)
     putStr(vecs, fieldToOut(0), row, symbol)
     putStr(vecs, fieldToOut(5), row, utf8(tks))
   }
@@ -594,88 +477,12 @@ object StockQuoteParser extends RecordParser with VectorWriteSupport {
   override val schema: StructType = Schemas.stockQuotes
 
   private val FieldNames = Array("t", "ax", "ap", "as", "bx", "bp", "bs", "z")
-  private val AllSeen = 255
 
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val condNode = rec.get("c")
-    val conditions =
-      if (condNode == null || condNode.isNull) ""
-      else {
-        val it = condNode.elements()
-        val sb = new StringBuilder
-        while (it.hasNext) {
-          if (sb.nonEmpty) sb.append(',')
-          sb.append(it.next().asText())
-        }
-        sb.toString
-      }
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      utf8(reqNode(rec, "ax").asText()),
-      dbl(rec, "ap"),
-      lng(rec, "as"),
-      utf8(reqNode(rec, "bx").asText()),
-      dbl(rec, "bp"),
-      lng(rec, "bs"),
-      utf8(conditions),
-      utf8(reqNode(rec, "z").asText()))
-  }
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var ap = 0d; var bp = 0d
-    var asz = 0L; var bsz = 0L
-    var ax: String = null; var bx: String = null; var z: String = null
-    var conditions = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "ax" => ax = jp.getText; seen |= 2
-          case "ap" => ap = streamDbl(jp, "ap"); seen |= 4
-          case "as" => asz = streamLng(jp, "as"); seen |= 8
-          case "bx" => bx = jp.getText; seen |= 16
-          case "bp" => bp = streamDbl(jp, "bp"); seen |= 32
-          case "bs" => bsz = streamLng(jp, "bs"); seen |= 64
-          case "z" => z = jp.getText; seen |= 128
-          case "c" =>
-            if (vt == JsonToken.START_ARRAY) {
-              val sb = new java.lang.StringBuilder
-              var t2 = jp.nextToken()
-              while (t2 != JsonToken.END_ARRAY) {
-                if (sb.length > 0) sb.append(',')
-                sb.append(jp.getText)
-                t2 = jp.nextToken()
-              }
-              conditions = sb.toString
-            } else if (vt.isStructStart) jp.skipChildren()
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, utf8(ax), ap, asz, utf8(bx), bp, bsz,
-      utf8(conditions), utf8(z))
-  }
-
-  /** Vector twin. Schema order: symbol, time, ask_exchange, ask_price,
-    * ask_size, bid_exchange, bid_price, bid_size, conditions, tape;
-    * strings written only after the record validates. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
+  /** Schema order: symbol, time, ask_exchange, ask_price, ask_size,
+    * bid_exchange, bid_price, bid_size, conditions, tape; strings
+    * written only after the record validates. */
+  override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
     def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
     def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var ax: String = null; var bx: String = null; var z: String = null
@@ -689,32 +496,20 @@ object StockQuoteParser extends RecordParser with VectorWriteSupport {
         if (vt == JsonToken.VALUE_NULL) ()
         else name match {
           case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "ax" => ax = jp.getText; seen |= 2
+          case "ax" => ax = streamStr(jp, "ax"); seen |= 2
           case "ap" => putD(fieldToOut(3), streamDbl(jp, "ap")); seen |= 4
           case "as" => putL(fieldToOut(4), streamLng(jp, "as")); seen |= 8
-          case "bx" => bx = jp.getText; seen |= 16
+          case "bx" => bx = streamStr(jp, "bx"); seen |= 16
           case "bp" => putD(fieldToOut(6), streamDbl(jp, "bp")); seen |= 32
           case "bs" => putL(fieldToOut(7), streamLng(jp, "bs")); seen |= 64
-          case "z" => z = jp.getText; seen |= 128
-          case "c" =>
-            if (vt == JsonToken.START_ARRAY) {
-              val sb = new java.lang.StringBuilder
-              var t2 = jp.nextToken()
-              while (t2 != JsonToken.END_ARRAY) {
-                if (sb.length > 0) sb.append(',')
-                sb.append(jp.getText)
-                t2 = jp.nextToken()
-              }
-              conditions = sb.toString
-            } else if (vt.isStructStart) jp.skipChildren()
+          case "z" => z = streamStr(jp, "z"); seen |= 128
+          case "c" => conditions = streamCsv(jp, "c")
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
       }
     } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
+    requireAll(seen, FieldNames)
     putStr(vecs, fieldToOut(0), row, symbol)
     putStr(vecs, fieldToOut(2), row, utf8(ax))
     putStr(vecs, fieldToOut(5), row, utf8(bx))
@@ -724,57 +519,16 @@ object StockQuoteParser extends RecordParser with VectorWriteSupport {
 }
 
 /** `{t,bp,bs,ap,as}` → crypto quote row (public Alpaca v1beta3 quote
-  * shape). Same token-walk + vector discipline as the trade parsers. */
+  * shape). Same walk discipline as the trade parsers. */
 object CryptoQuoteParser extends RecordParser with VectorWriteSupport {
   override val schema: StructType = Schemas.cryptoQuotes
 
   private val FieldNames = Array("t", "bp", "bs", "ap", "as")
-  private val AllSeen = 31
 
-  override def parse(symbol: String, rec: JsonNode): InternalRow =
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      dbl(rec, "bp"),
-      dbl(rec, "bs"),
-      dbl(rec, "ap"),
-      dbl(rec, "as"))
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var bp = 0d; var bs = 0d; var ap = 0d; var asz = 0d
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "bp" => bp = streamDbl(jp, "bp"); seen |= 2
-          case "bs" => bs = streamDbl(jp, "bs"); seen |= 4
-          case "ap" => ap = streamDbl(jp, "ap"); seen |= 8
-          case "as" => asz = streamDbl(jp, "as"); seen |= 16
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, bp, bs, ap, asz)
-  }
-
-  /** Vector twin. Schema order: symbol, time, bid_price, bid_size,
-    * ask_price, ask_size. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
+  /** Schema order: symbol, time, bid_price, bid_size, ask_price,
+    * ask_size. */
+  override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
     def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
     def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var seen = 0
@@ -795,9 +549,7 @@ object CryptoQuoteParser extends RecordParser with VectorWriteSupport {
         tk = jp.nextToken()
       }
     } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
+    requireAll(seen, FieldNames)
     putStr(vecs, fieldToOut(0), row, symbol)
   }
 }
@@ -811,58 +563,11 @@ object OptionTradeParser extends RecordParser with VectorWriteSupport {
   override val schema: StructType = Schemas.optionTrades
 
   private val FieldNames = Array("t", "x", "p", "s")
-  private val AllSeen = 15
 
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val condNode = rec.get("c")
-    val condition =
-      if (condNode == null || condNode.isNull) "" else condNode.asText()
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      utf8(reqNode(rec, "x").asText()),
-      dbl(rec, "p"),
-      lng(rec, "s"),
-      utf8(condition))
-  }
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var p = 0d; var s = 0L
-    var x: String = null; var condition = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "x" => x = jp.getText; seen |= 2
-          case "p" => p = streamDbl(jp, "p"); seen |= 4
-          case "s" => s = streamLng(jp, "s"); seen |= 8
-          case "c" =>
-            if (vt.isStructStart) jp.skipChildren() else condition = jp.getText
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, utf8(x), p, s, utf8(condition))
-  }
-
-  /** Vector twin. Schema order: symbol, time, exchange, price, size,
-    * condition; strings written only after the record validates. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
+  /** Schema order: symbol, time, exchange, price, size, condition;
+    * strings written only after the record validates. */
+  override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
     def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
     def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var x: String = null; var condition = ""
@@ -875,19 +580,16 @@ object OptionTradeParser extends RecordParser with VectorWriteSupport {
         if (vt == JsonToken.VALUE_NULL) ()
         else name match {
           case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "x" => x = jp.getText; seen |= 2
+          case "x" => x = streamStr(jp, "x"); seen |= 2
           case "p" => putD(fieldToOut(3), streamDbl(jp, "p")); seen |= 4
           case "s" => putL(fieldToOut(4), streamLng(jp, "s")); seen |= 8
-          case "c" =>
-            if (vt.isStructStart) jp.skipChildren() else condition = jp.getText
+          case "c" => condition = streamStr(jp, "c")
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
       }
     } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
+    requireAll(seen, FieldNames)
     putStr(vecs, fieldToOut(0), row, symbol)
     putStr(vecs, fieldToOut(2), row, utf8(x))
     putStr(vecs, fieldToOut(5), row, utf8(condition))
@@ -901,66 +603,11 @@ object OptionQuoteParser extends RecordParser with VectorWriteSupport {
   override val schema: StructType = Schemas.optionQuotes
 
   private val FieldNames = Array("t", "ax", "ap", "as", "bx", "bp", "bs")
-  private val AllSeen = 127
 
-  override def parse(symbol: String, rec: JsonNode): InternalRow = {
-    val condNode = rec.get("c")
-    val condition =
-      if (condNode == null || condNode.isNull) "" else condNode.asText()
-    InternalRow(
-      utf8(symbol),
-      isoMicros(rec, "t"),
-      utf8(reqNode(rec, "ax").asText()),
-      dbl(rec, "ap"),
-      lng(rec, "as"),
-      utf8(reqNode(rec, "bx").asText()),
-      dbl(rec, "bp"),
-      lng(rec, "bs"),
-      utf8(condition))
-  }
-
-  override def parseStream(symbol: String,
-      jp: com.fasterxml.jackson.core.JsonParser): InternalRow = {
-    import com.fasterxml.jackson.core.JsonToken
-    var tUs = 0L; var ap = 0d; var bp = 0d
-    var asz = 0L; var bsz = 0L
-    var ax: String = null; var bx: String = null; var condition = ""
-    var seen = 0
-    try {
-      var tk = jp.nextToken()
-      while (tk == JsonToken.FIELD_NAME) {
-        val name = jp.currentName()
-        val vt = jp.nextToken()
-        if (vt == JsonToken.VALUE_NULL) ()
-        else name match {
-          case "t" => tUs = streamTs(jp, "t"); seen |= 1
-          case "ax" => ax = jp.getText; seen |= 2
-          case "ap" => ap = streamDbl(jp, "ap"); seen |= 4
-          case "as" => asz = streamLng(jp, "as"); seen |= 8
-          case "bx" => bx = jp.getText; seen |= 16
-          case "bp" => bp = streamDbl(jp, "bp"); seen |= 32
-          case "bs" => bsz = streamLng(jp, "bs"); seen |= 64
-          case "c" =>
-            if (vt.isStructStart) jp.skipChildren() else condition = jp.getText
-          case _ => if (vt.isStructStart) jp.skipChildren()
-        }
-        tk = jp.nextToken()
-      }
-    } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
-    InternalRow(utf8(symbol), tUs, utf8(ax), ap, asz, utf8(bx), bp, bsz,
-      utf8(condition))
-  }
-
-  /** Vector twin. Schema order: symbol, time, ask_exchange, ask_price,
-    * ask_size, bid_exchange, bid_price, bid_size, condition. */
-  override def parseIntoVectors(symbol: UTF8String,
-      jp: com.fasterxml.jackson.core.JsonParser,
-      vecs: Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector],
-      fieldToOut: Array[Int], row: Int): Unit = {
-    import com.fasterxml.jackson.core.JsonToken
+  /** Schema order: symbol, time, ask_exchange, ask_price, ask_size,
+    * bid_exchange, bid_price, bid_size, condition. */
+  override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
+      vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
     def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
     def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var ax: String = null; var bx: String = null; var condition = ""
@@ -973,22 +620,19 @@ object OptionQuoteParser extends RecordParser with VectorWriteSupport {
         if (vt == JsonToken.VALUE_NULL) ()
         else name match {
           case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "ax" => ax = jp.getText; seen |= 2
+          case "ax" => ax = streamStr(jp, "ax"); seen |= 2
           case "ap" => putD(fieldToOut(3), streamDbl(jp, "ap")); seen |= 4
           case "as" => putL(fieldToOut(4), streamLng(jp, "as")); seen |= 8
-          case "bx" => bx = jp.getText; seen |= 16
+          case "bx" => bx = streamStr(jp, "bx"); seen |= 16
           case "bp" => putD(fieldToOut(6), streamDbl(jp, "bp")); seen |= 32
           case "bs" => putL(fieldToOut(7), streamLng(jp, "bs")); seen |= 64
-          case "c" =>
-            if (vt.isStructStart) jp.skipChildren() else condition = jp.getText
+          case "c" => condition = streamStr(jp, "c")
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
       }
     } catch { case e: Throwable => skipRecord(jp); throw e }
-    if (seen != AllSeen)
-      throw new IllegalArgumentException(
-        s"missing field '${FieldNames(Integer.numberOfTrailingZeros(~seen))}'")
+    requireAll(seen, FieldNames)
     putStr(vecs, fieldToOut(0), row, symbol)
     putStr(vecs, fieldToOut(2), row, utf8(ax))
     putStr(vecs, fieldToOut(5), row, utf8(bx))

@@ -115,10 +115,6 @@ object Streaming {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val width = statePartitionsFor(spark, inputBytes)
     spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    val trialProvider = sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
-    trialProvider.foreach(spark.conf.set(providerKey, _))
     val q = df.writeStream
       .outputMode(mode)
       .format("memory")
@@ -127,10 +123,6 @@ object Streaming {
     try q.processAllAvailable() finally {
       q.stop()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      if (trialProvider.isDefined) prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
     spark.table(qname)
   }

@@ -143,7 +143,38 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       "APCA-API-KEY-ID" -> "k", "APCA-API-SECRET-KEY" -> "s",
       "symbols" -> "['MALFORMED']", "timeframe" -> "1Day",
       "start" -> "2021-01-04T00:00:00Z", "end" -> "2021-01-06T00:00:00Z")).load()
-    assert(df.count() == 2) // bad first record dropped, 2 daily bars kept
+    val warns = captureWarnings("graft.connector.AlpacaPageSource") {
+      assert(df.count() == 2) // bad first record dropped, 2 daily bars kept
+    }
+    // one summary line for the partition, not one line per record
+    val summary = warns.filter(_.contains("'MALFORMED'"))
+    assert(summary.size == 1, s"expected one summary WARN, got: $warns")
+    assert(summary.head.contains("Skipped 1 malformed record(s)") &&
+      summary.head.contains("missing field 'h'"), summary.head)
+  }
+
+  /** WARN+ messages logged under `loggerName` while `body` runs (local
+    * mode: executor tasks log in this JVM). */
+  private def captureWarnings(loggerName: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          lines.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(loggerName).asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try body finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    lines.asScala.toSeq
   }
 
   test("trades scan: conditions array flattened to CSV string") {
@@ -351,11 +382,10 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("scan integrity: row-based (streaming) path catches the same faults") {
-    // force the row reader by disabling columnar via a stream-shaped
-    // read: simplest equivalent is the non-vectorized path through
-    // pages.flatten — exercised here by pruning to the full schema and
-    // using the micro-batch reader factory's row route indirectly.
-    // Direct unit check: AlpacaPartitionReader over the DUPPAGE chain.
+    // Micro-batch reads are columnar like batch reads (MicroBatchSpec);
+    // the row reader serves the timeless sources, whose pages never
+    // repeat a symbol's run. Drive it directly over the DUPPAGE chain
+    // so the page walk's row sink is held to the same ordering check.
     import graft.connector._
     val cfg = AlpacaScanConfig(
       endpoint = graft.core.AlpacaOptions.stripApiVersion(AlpacaStubServer.endpoint),

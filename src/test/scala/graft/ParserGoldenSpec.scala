@@ -1,6 +1,10 @@
 package graft
 
+import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{BarParser, CorporateActionParser, TradeParser}
@@ -270,5 +274,119 @@ class ParserGoldenSpec extends AnyFunSuite {
     assert(row.getDouble(5) == 29000.0 && row.getDouble(6) == 0.5)
     assert(row.getDouble(16) == 29000.0 && row.getLong(17) == 999L)
     assert(row.isNullAt(18)) // no prevDailyBar
+  }
+
+  private def vectors(schema: StructType): Array[WritableColumnVector] =
+    OnHeapColumnVector.allocateColumns(4, schema).asInstanceOf[Array[WritableColumnVector]]
+
+  test("stock quote golden tuple: conditions CSV, integer sizes") {
+    import graft.core.StockQuoteParser
+    val q = StockQuoteParser.parse("AAPL", js(
+      """{"t": "2021-01-01T09:30:00Z", "ax": "Q", "ap": 131.5, "as": 3,
+        |"bx": "N", "bp": 131.0, "bs": 2, "c": ["R", "W"], "z": "C"}""".stripMargin))
+    assert(q.getUTF8String(0).toString == "AAPL" && q.getLong(1) == T0)
+    assert(q.getUTF8String(2).toString == "Q")
+    assert(q.getDouble(3) == 131.5 && q.getLong(4) == 3L)
+    assert(q.getUTF8String(5).toString == "N")
+    assert(q.getDouble(6) == 131.0 && q.getLong(7) == 2L)
+    assert(q.getUTF8String(8).toString == "R,W" && q.getUTF8String(9).toString == "C")
+    val bare = StockQuoteParser.parse("AAPL", js(
+      """{"t": "2021-01-01T09:30:00Z", "ax": "Q", "ap": 1.0, "as": 1,
+        |"bx": "N", "bp": 1.0, "bs": 1, "z": "C"}""".stripMargin))
+    assert(bare.getUTF8String(8).toString == "") // absent c
+    intercept[IllegalArgumentException] { // missing tape
+      StockQuoteParser.parse("AAPL", js(
+        """{"t": "2021-01-01T09:30:00Z", "ax": "Q", "ap": 1.0, "as": 1,
+          |"bx": "N", "bp": 1.0, "bs": 1}""".stripMargin))
+    }
+  }
+
+  test("crypto trade/quote golden tuples: fractional sizes, taker side") {
+    import graft.core.{CryptoQuoteParser, CryptoTradeParser}
+    val t = CryptoTradeParser.parse("BTC/USD", js(
+      """{"t": "2021-01-01T09:30:00Z", "p": 29000.25, "s": 0.125, "i": 42, "tks": "S"}"""))
+    assert(t.getUTF8String(0).toString == "BTC/USD" && t.getLong(1) == T0)
+    assert(t.getDouble(2) == 29000.25 && t.getDouble(3) == 0.125)
+    assert(t.getLong(4) == 42L && t.getUTF8String(5).toString == "S")
+    intercept[IllegalArgumentException] { // missing taker side
+      CryptoTradeParser.parse("BTC/USD", js(
+        """{"t": "2021-01-01T09:30:00Z", "p": 1.0, "s": 1.0, "i": 1}"""))
+    }
+    val q = CryptoQuoteParser.parse("ETH/USD", js(
+      """{"t": "2021-01-01T09:30:00Z", "bp": 730.5, "bs": 1.5, "ap": 731.0, "as": 0.25}"""))
+    assert(q.getUTF8String(0).toString == "ETH/USD" && q.getLong(1) == T0)
+    assert(q.getDouble(2) == 730.5 && q.getDouble(3) == 1.5)
+    assert(q.getDouble(4) == 731.0 && q.getDouble(5) == 0.25)
+    intercept[IllegalArgumentException] { // null reads as absent
+      CryptoQuoteParser.parse("ETH/USD", js(
+        """{"t": "2021-01-01T09:30:00Z", "bp": 1.0, "bs": 1.0, "ap": null, "as": 1.0}"""))
+    }
+  }
+
+  test("pruned projection: parseIntoVectors writes only the mapped fields") {
+    val bar = js("""{"t": "2021-01-01T09:30:00Z", "o": 1.0, "h": 2.0, "l": 0.5,
+      |"c": 1.5, "v": 10, "n": 3, "vw": 1.25}""".stripMargin).traverse()
+    bar.nextToken()
+    // output = (close, time): every other bar field maps to -1
+    val barVecs = vectors(StructType.fromDDL("close DOUBLE, time TIMESTAMP"))
+    BarParser.parseIntoVectors(UTF8String.fromString("AAPL"), bar, barVecs,
+      Array(-1, 1, -1, -1, -1, 0, -1, -1, -1), 2)
+    assert(barVecs(0).getDouble(2) == 1.5 && barVecs(1).getLong(2) == T0)
+    assert(bar.currentToken() == JsonToken.END_OBJECT)
+    // string fields under pruning: only conditions survives
+    val trade = js("""{"t": "2021-01-01T09:30:00Z", "x": "V", "p": 1.0, "s": 1,
+      |"c": ["@", "I"], "i": 1, "z": "C"}""".stripMargin).traverse()
+    trade.nextToken()
+    val tradeVecs = vectors(StructType.fromDDL("conditions STRING"))
+    TradeParser.parseIntoVectors(UTF8String.fromString("AAPL"), trade, tradeVecs,
+      Array(-1, -1, -1, -1, -1, 0, -1, -1), 0)
+    assert(tradeVecs(0).getUTF8String(0).toString == "@,I")
+  }
+
+  /** Feeds `[bad, good]` through TradeParser's walk: the bad record
+    * must throw for warn-and-skip and leave the stream ON its own
+    * END_OBJECT, so the good record decodes next. */
+  private def assertStructFieldSkipped(bad: String): Unit = {
+    val good = """{"t": "2021-01-01T09:30:00Z", "x": "V", "p": 2.0, "s": 2, "i": 8, "z": "C"}"""
+    val jp = mapper.createParser(s"[$bad, $good]")
+    val vecs = vectors(TradeParser.schema)
+    val all = TradeParser.schema.fields.indices.toArray
+    val sym = UTF8String.fromString("AAPL")
+    assert(jp.nextToken() == JsonToken.START_ARRAY && jp.nextToken() == JsonToken.START_OBJECT)
+    intercept[IllegalArgumentException] {
+      TradeParser.parseIntoVectors(sym, jp, vecs, all, 0)
+    }
+    assert(jp.currentToken() == JsonToken.END_OBJECT)
+    assert(jp.nextToken() == JsonToken.START_OBJECT, "stream left inside the bad record")
+    TradeParser.parseIntoVectors(sym, jp, vecs, all, 0)
+    assert(vecs(2).getUTF8String(0).toString == "V" && vecs(3).getDouble(0) == 2.0)
+    assert(jp.nextToken() == JsonToken.END_ARRAY)
+    intercept[IllegalArgumentException] { TradeParser.parse("AAPL", js(bad)) }
+  }
+
+  test("struct-valued string field skips the record (object x after p)") {
+    assertStructFieldSkipped(
+      """{"t": "2021-01-01T09:30:00Z", "p": 1.0, "s": 1, "i": 7, "z": "C", "x": {"p": 999.0}}""")
+  }
+
+  test("struct-valued string field skips the record (object x before p)") {
+    assertStructFieldSkipped(
+      """{"t": "2021-01-01T09:30:00Z", "x": {"p": 999.0}, "p": 1.0, "s": 1, "i": 7, "z": "C"}""")
+  }
+
+  test("every flat parser rejects an object or array where a string belongs") {
+    import graft.core.{CryptoTradeParser, OptionQuoteParser, OptionTradeParser, StockQuoteParser}
+    val t = "\"t\": \"2021-01-01T09:30:00Z\""
+    val cases = Seq(
+      TradeParser -> s"""{$t, "x": "V", "p": 1.0, "s": 1, "i": 1, "z": ["C"]}""",
+      TradeParser -> s"""{$t, "x": "V", "p": 1.0, "s": 1, "i": 1, "z": "C", "c": [{"a": 1}]}""",
+      CryptoTradeParser -> s"""{$t, "p": 1.0, "s": 1.0, "i": 1, "tks": {"side": "B"}}""",
+      StockQuoteParser -> s"""{$t, "ax": {"v": 1}, "ap": 1.0, "as": 1, "bx": "N", "bp": 1.0, "bs": 1, "z": "C"}""",
+      StockQuoteParser -> s"""{$t, "ax": "Q", "ap": 1.0, "as": 1, "bx": [], "bp": 1.0, "bs": 1, "z": "C"}""",
+      OptionTradeParser -> s"""{$t, "x": "A", "p": 1.0, "s": 1, "c": {"code": "I"}}""",
+      OptionQuoteParser -> s"""{$t, "ax": "A", "ap": 1.0, "as": 1, "bx": "B", "bp": 1.0, "bs": 1, "c": ["I"]}""")
+    cases.foreach { case (p, rec) =>
+      intercept[IllegalArgumentException](p.parse("X", js(rec)))
+    }
   }
 }
