@@ -8,6 +8,7 @@ import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.sources._
@@ -350,6 +351,9 @@ case class AlpacaScan(sourceDef: AlpacaSourceDef, cfg: AlpacaScanConfig,
     s"AlpacaScan(${sourceDef.shortName}, symbols=${cfg.symbols.mkString(",")})"
   override def toBatch: Batch = this
 
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new RecordsSkippedMetric)
+
   /** Reported only with `cluster_by_symbol=true`: every planned
     * partition is symbol-pure (one symbol × one interval tile), so the
     * scan IS KeyGroupedPartitioning on identity(symbol). With
@@ -550,6 +554,23 @@ class AlpacaReaderFactory(cfg: AlpacaScanConfig, pathElements: Seq[String],
   * transient fault into wrong aggregates. */
 class ScanIntegrityException(msg: String) extends RuntimeException(msg)
 
+/** Scan metric `recordsSkipped`: malformed records the page walk
+  * skipped (E4), summed over the scan's partitions. */
+class RecordsSkippedMetric extends CustomSumMetric {
+  override def name(): String = RecordsSkippedMetric.Name
+  override def description(): String = "malformed records skipped"
+}
+
+object RecordsSkippedMetric {
+  val Name = "recordsSkipped"
+
+  /** A reader's running count, as Spark polls it. */
+  def task(count: Long): Array[CustomTaskMetric] = Array(new CustomTaskMetric {
+    override def name(): String = Name
+    override def value(): Long = count
+  })
+}
+
 /** Shared executor-side page source: paginated HTTP fetch → one token
   * walk per page (no page DOM, no char decode) → records decoded into
   * column vectors or rows, fully pipelined (page at a time, SURVEY
@@ -597,6 +618,7 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
   // one's reason, for the summary WARN
   private var skipped = 0L
   private var firstSkip: String = null
+  private var skipsLogged = false
 
   private def flushRun(): Unit =
     if (curSym != null && haveLast) lastBySym.update(curSym, lastTs)
@@ -687,14 +709,18 @@ private[connector] class AlpacaPageSource(cfg: AlpacaScanConfig,
     sink.count
   }
 
+  /** Malformed records skipped so far: the readers' `recordsSkipped`
+    * task metric. */
+  def skippedRecords: Long = skipped
+
   /** One WARN per partition for its malformed-record skips — the count
     * and the first reason — instead of one per record. The readers
     * call it when they close. */
   def logSkipped(): Unit =
-    if (skipped > 0) {
+    if (skipped > 0 && !skipsLogged) {
       log.warn(s"Skipped $skipped malformed record(s) in partition '${partition.symbol}' " +
         s"[${partition.startMicros},${partition.endMicros}); first: $firstSkip")
-      skipped = 0
+      skipsLogged = true
     }
 
   /** Where the walk's records land. */
@@ -857,6 +883,8 @@ class AlpacaPartitionReader(cfg: AlpacaScanConfig, pathElements: Seq[String],
       true
     } else false
   override def get(): InternalRow = current
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    RecordsSkippedMetric.task(pageSource.skippedRecords)
   override def close(): Unit = pageSource.logSkipped()
 }
 
@@ -976,5 +1004,7 @@ class AlpacaColumnarPartitionReader(cfg: AlpacaScanConfig,
     if (batch != null) { batch.close(); batch = null }
 
   override def get(): ColumnarBatch = batch
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    RecordsSkippedMetric.task(pageSource.skippedRecords)
   override def close(): Unit = { releaseBatch(); pageSource.logSkipped() }
 }

@@ -133,61 +133,6 @@ class AlpacaHttpClient(
       .map(_.asText())
       .filter(_.nonEmpty)
 
-  /** Streaming skim for `next_page_token` PLUS an independent record
-    * count — one lex-only pass over the whole page (the old token-only
-    * skim `skipChildren`'d the data field, which lexes the same bytes
-    * anyway; walking them explicitly costs the same and yields the
-    * count for free). `arrayObjectCount` is the number of objects whose
-    * immediate parent container is an ARRAY — for flat-record
-    * array-envelope sources (bars/trades/quotes) that IS the page's
-    * record count, computed by a second, independent code path from the
-    * consumer's record parse. The scan-integrity check compares the
-    * two, so a parser-side drop/duplicate (vector drift, walker
-    * misalignment) fails the task loudly instead of silently skewing
-    * downstream aggregates. Runs on the prefetch thread — overlapped
-    * with the consumer's parse of the previous page, so the count adds
-    * no wall-clock to the scan's critical path. */
-  private def skimPage(bytes: Array[Byte]): (Option[String], Long) = {
-    import com.fasterxml.jackson.core.JsonToken._
-    val jp = mapper.createParser(bytes)
-    try {
-      var tok: Option[String] = None
-      var count = 0L
-      // container stack: bit set = that nesting level is an ARRAY
-      var depth = 0
-      var arrayBits = 0L // API pages nest ≤6 deep; 64 is headroom
-      var pendingToken = false // last token was the top-level token field name
-      var tk = jp.nextToken()
-      while (tk != null) {
-        tk match {
-          case START_OBJECT =>
-            if (depth > 0 && ((arrayBits >> (depth - 1)) & 1L) == 1L) count += 1
-            if (depth >= 64) throw new IllegalArgumentException(
-              "page JSON nested deeper than 64 levels")
-            arrayBits &= ~(1L << depth); depth += 1
-            pendingToken = false
-          case START_ARRAY =>
-            if (depth >= 64) throw new IllegalArgumentException(
-              "page JSON nested deeper than 64 levels")
-            arrayBits |= 1L << depth; depth += 1
-            pendingToken = false
-          case END_OBJECT | END_ARRAY =>
-            depth -= 1
-            pendingToken = false
-          case FIELD_NAME =>
-            pendingToken = depth == 1 && jp.currentName() == "next_page_token"
-          case VALUE_STRING if pendingToken =>
-            tok = Some(jp.getText).filter(_.nonEmpty)
-            pendingToken = false
-          case _ =>
-            pendingToken = false
-        }
-        tk = jp.nextToken()
-      }
-      (tok, count)
-    } finally jp.close()
-  }
-
   /** Lazy page iterator: yields each page's JSON while a
     * `next_page_token` is present.
     *
@@ -205,16 +150,16 @@ class AlpacaHttpClient(
     fetchAllPagesBytes(params, rateLimitDelaySec).map(b => mapper.readTree(b))
 
   /** Raw-bytes pagination. The consumer stream-parses each page; the
-    * `next_page_token` needed to chain requests comes from a cheap
-    * lex-only skim, so the full parse stays on the consumer's side of
-    * the pipeline. */
+    * `next_page_token` needed to chain requests comes from a byte-level
+    * skim ([[AlpacaHttpClient.skimPage]]), so the full parse stays on
+    * the consumer's side of the pipeline. */
   def fetchAllPagesBytes(
       params: Seq[(String, String)],
       rateLimitDelaySec: Double = 0.0): Iterator[Array[Byte]] =
     fetchAllPagesCounted(params, rateLimitDelaySec).map(_.bytes)
 
   /** Pagination with the skim's independent per-page record count
-    * attached (see [[skimPage]]) — the readers' scan-integrity
+    * attached (see [[AlpacaHttpClient.skimPage]]) — the readers' scan-integrity
     * cross-check consumes this form. */
   def fetchAllPagesCounted(
       params: Seq[(String, String)],
@@ -230,7 +175,7 @@ class AlpacaHttpClient(
             Thread.sleep((rateLimitDelaySec * 1000).toLong)
           val pg = getPageBytes(params, nextToken)
           numPages += 1
-          val (tok, count) = skimPage(pg)
+          val (tok, count) = AlpacaHttpClient.skimPage(pg)
           nextToken = tok
           nextToken.foreach(seen.check)
           AlpacaHttpClient.FetchedPage(pg, count)
@@ -245,7 +190,7 @@ class AlpacaHttpClient(
           inFlight = java.util.concurrent.CompletableFuture.supplyAsync(
             () => {
               val b = getPageBytes(params, tok)
-              val (nxt, count) = skimPage(b)
+              val (nxt, count) = AlpacaHttpClient.skimPage(b)
               (b, nxt, count)
             },
             AlpacaHttpClient.prefetchPool)
@@ -288,6 +233,262 @@ object AlpacaHttpClient {
   /** One fetched API page: raw body + the skim's independent count of
     * array-parented record objects (see `skimPage`). */
   final case class FetchedPage(bytes: Array[Byte], arrayRecordCount: Long)
+
+  /** Skim of one page for its `next_page_token` plus an independent
+    * record count: one byte scan over the structure, no tokenizer.
+    * The count is the number of objects whose immediate parent is an
+    * ARRAY; for the flat-record array-envelope sources (bars, trades,
+    * quotes) that is the page's record count, computed apart from the
+    * consumer's record walk. The scan-integrity check compares the
+    * two, so a walk that drops or duplicates records fails the task
+    * instead of silently skewing aggregates.
+    *
+    * The scan fails the page on an unterminated string or an
+    * unbalanced page ("Unexpected end-of-input"), a mismatched
+    * bracket, a comma, colon or value out of JSON order, a scalar that
+    * is not a JSON number or literal, a bad escape, a raw control
+    * character in a string, nesting deeper than 64 levels, and
+    * anything but whitespace after the top-level value. String bytes
+    * are not checked for UTF-8; the consumer's Jackson walk reads every
+    * byte of the top-level object and checks them there.
+    *
+    * It runs on the prefetch thread, overlapped with the consumer's
+    * decode of the previous page — except on a partition's first page,
+    * which the consumer waits for — and its CPU competes with decoding
+    * when a scan's tasks and prefetch threads fill the cores. */
+  private[graft] def skimPage(b: Array[Byte]): (Option[String], Long) = {
+    import Skim._
+    val n = b.length
+    var i = if (n >= 3 && b(0) == 0xEF.toByte && b(1) == 0xBB.toByte && b(2) == 0xBF.toByte) 3 else 0
+    var state = Value
+    // container stack: bit d set = nesting level d is an ARRAY
+    var depth = 0
+    var arrayBits = 0L // API pages nest ≤6 deep; 64 is headroom
+    var count = 0L
+    var tok: Option[String] = None
+    var tokenNext = false // the value ahead is the top-level next_page_token's
+    var keyStart = 0; var keyEnd = 0 // the last depth-1 key, quotes included
+    while (i < n) {
+      (Cls(b(i) & 0xff).toInt: @annotation.switch) match {
+        case Ws => i += 1
+        case Quote =>
+          val isKey = state == KeyOrClose || state == Key
+          if (!isKey && state != Value && state != ValueOrClose) unexpected(b, i, state)
+          val s = i
+          i = stringEnd(b, s)
+          if (isKey) {
+            if (depth == 1) { keyStart = s; keyEnd = i }
+            state = Colon
+          } else {
+            if (tokenNext) {
+              val t = jsonString(b, s, i)
+              tok = if (t.isEmpty) None else Some(t)
+            }
+            tokenNext = false
+            state = if (depth == 0) Done else CommaOrClose
+          }
+        case OpenObj =>
+          if (state != Value && state != ValueOrClose) unexpected(b, i, state)
+          if (depth > 0 && ((arrayBits >> (depth - 1)) & 1L) == 1L) count += 1
+          if (depth >= 64) throw tooDeep
+          arrayBits &= ~(1L << depth); depth += 1
+          tokenNext = false
+          state = KeyOrClose; i += 1
+        case OpenArr =>
+          if (state != Value && state != ValueOrClose) unexpected(b, i, state)
+          if (depth >= 64) throw tooDeep
+          arrayBits |= 1L << depth; depth += 1
+          tokenNext = false
+          state = ValueOrClose; i += 1
+        case CloseObj =>
+          if (state != KeyOrClose &&
+              (state != CommaOrClose || ((arrayBits >> (depth - 1)) & 1L) == 1L))
+            unexpected(b, i, state)
+          depth -= 1
+          state = if (depth == 0) Done else CommaOrClose; i += 1
+        case CloseArr =>
+          if (state != ValueOrClose &&
+              (state != CommaOrClose || ((arrayBits >> (depth - 1)) & 1L) == 0L))
+            unexpected(b, i, state)
+          depth -= 1
+          state = if (depth == 0) Done else CommaOrClose; i += 1
+        case ColonCls =>
+          if (state != Colon) unexpected(b, i, state)
+          tokenNext = depth == 1 && isTokenKey(b, keyStart, keyEnd)
+          state = Value; i += 1
+        case Comma =>
+          if (state != CommaOrClose) unexpected(b, i, state)
+          state = if (((arrayBits >> (depth - 1)) & 1L) == 1L) Value else Key; i += 1
+        case _ => // a number or literal
+          if (state != Value && state != ValueOrClose) unexpected(b, i, state)
+          i = scalarEnd(b, i, depth)
+          tokenNext = false
+          state = if (depth == 0) Done else CommaOrClose
+      }
+    }
+    if (state != Done)
+      throw endOfInput(
+        if (depth > 0) s"$depth unclosed container(s)" else "no JSON value in the page")
+    (tok, count)
+  }
+
+  /** Tables and helpers of [[skimPage]]. */
+  private object Skim {
+    // grammar states: what the next token may be
+    final val Value = 0 // a value (document start, after ':', after ',' in an array)
+    final val ValueOrClose = 1 // after '['
+    final val KeyOrClose = 2 // after '{'
+    final val Key = 3 // after ',' in an object
+    final val Colon = 4 // after a key
+    final val CommaOrClose = 5 // after a value inside a container
+    final val Done = 6 // after the top-level value: whitespace only
+
+    // byte classes outside strings; 0 = a number or literal byte
+    final val Ws = 1
+    final val Quote = 2
+    final val OpenObj = 3
+    final val CloseObj = 4
+    final val OpenArr = 5
+    final val CloseArr = 6
+    final val ColonCls = 7
+    final val Comma = 8
+    val Cls: Array[Byte] = {
+      val t = new Array[Byte](256)
+      Seq(' ', '\t', '\n', '\r').foreach(c => t(c) = Ws.toByte)
+      t('"') = Quote.toByte
+      t('{') = OpenObj.toByte; t('}') = CloseObj.toByte
+      t('[') = OpenArr.toByte; t(']') = CloseArr.toByte
+      t(':') = ColonCls.toByte; t(',') = Comma.toByte
+      t
+    }
+
+    // bytes inside strings: 0 plain, 1 closing quote, 2 backslash, 3 control
+    private val StrCls: Array[Byte] = {
+      val t = new Array[Byte](256)
+      (0 until 0x20).foreach(c => t(c) = 3)
+      t('"') = 1; t('\\') = 2
+      t
+    }
+
+    private val Literals = Array("true", "false", "null").map(_.getBytes(StandardCharsets.US_ASCII))
+    private val TokenKey = "\"next_page_token\"".getBytes(StandardCharsets.US_ASCII)
+    private val factory = new com.fasterxml.jackson.core.JsonFactory()
+
+    /** Index past the closing quote of the string opened at `s`. */
+    def stringEnd(b: Array[Byte], s: Int): Int = {
+      val n = b.length
+      var i = s + 1
+      while (true) {
+        while (i < n && StrCls(b(i) & 0xff) == 0) i += 1
+        if (i >= n) throw endOfInput(s"in the string at byte $s")
+        StrCls(b(i) & 0xff) match {
+          case 1 => return i + 1
+          case 2 => i = escapeEnd(b, i)
+          case _ => throw new IllegalArgumentException(
+            s"page JSON: unescaped control character in a string at byte $i")
+        }
+      }
+      throw new IllegalStateException("unreachable")
+    }
+
+    /** Index past the escape sequence whose backslash is at `i`. */
+    private def escapeEnd(b: Array[Byte], i: Int): Int = {
+      if (i + 1 >= b.length) throw endOfInput(s"in the escape at byte $i")
+      b(i + 1).toChar match {
+        case '"' | '\\' | '/' | 'b' | 'f' | 'n' | 'r' | 't' => i + 2
+        case 'u' =>
+          if (i + 6 > b.length) throw endOfInput(s"in the escape at byte $i")
+          var j = i + 2
+          while (j < i + 6 && Character.digit(b(j).toInt, 16) >= 0) j += 1
+          if (j < i + 6) throw new IllegalArgumentException(s"page JSON: bad \\u escape at byte $i")
+          i + 6
+        case _ => throw new IllegalArgumentException(s"page JSON: bad escape at byte $i")
+      }
+    }
+
+    /** Index past the number or literal at `s`, which must end at a
+      * delimiter or, at depth 0, at the end of the page. */
+    def scalarEnd(b: Array[Byte], s: Int, depth: Int): Int = {
+      val n = b.length
+      val c = b(s)
+      val e =
+        if (c == '-' || (c >= '0' && c <= '9')) numberEnd(b, s)
+        else {
+          var j = s
+          while (j < n && Cls(b(j) & 0xff) == 0) j += 1
+          var k = 0
+          while (k < Literals.length && !java.util.Arrays.equals(b, s, j, Literals(k), 0, Literals(k).length))
+            k += 1
+          if (k < Literals.length) j else -1
+        }
+      if (e < 0 || (e < n && Cls(b(e) & 0xff) == 0)) {
+        var j = s
+        while (j < n && Cls(b(j) & 0xff) == 0) j += 1
+        if (j == n && depth > 0) throw endOfInput(s"in the value at byte $s")
+        throw new IllegalArgumentException(
+          s"page JSON: unrecognized token '${new String(b, s, math.min(j - s, 40),
+            StandardCharsets.UTF_8)}' at byte $s")
+      }
+      if (e == n && depth > 0) throw endOfInput(s"in the value at byte $s")
+      e
+    }
+
+    /** Index past the JSON number (`-? (0 | [1-9][0-9]*) (. [0-9]+)?
+      * ([eE] [+-]? [0-9]+)?`) at `s`, or −1. */
+    private def numberEnd(b: Array[Byte], s: Int): Int = {
+      var j = s
+      if (b(j) == '-') j += 1
+      if (j < b.length && b(j) == '0') j += 1
+      else if (isDigit(b, j)) j = digitsEnd(b, j + 1)
+      else return -1
+      if (j < b.length && b(j) == '.') {
+        val d = digitsEnd(b, j + 1)
+        if (d == j + 1) return -1
+        j = d
+      }
+      if (j < b.length && (b(j) == 'e' || b(j) == 'E')) {
+        j += 1
+        if (j < b.length && (b(j) == '+' || b(j) == '-')) j += 1
+        val d = digitsEnd(b, j)
+        if (d == j) return -1
+        j = d
+      }
+      j
+    }
+
+    private def isDigit(b: Array[Byte], j: Int): Boolean =
+      j < b.length && b(j) >= '0' && b(j) <= '9'
+
+    private def digitsEnd(b: Array[Byte], from: Int): Int = {
+      var j = from
+      while (isDigit(b, j)) j += 1
+      j
+    }
+
+    /** Whether the quoted key `b[s, e)` is `next_page_token`. */
+    def isTokenKey(b: Array[Byte], s: Int, e: Int): Boolean =
+      java.util.Arrays.equals(b, s, e, TokenKey, 0, TokenKey.length) || {
+        var j = s
+        while (j < e && b(j) != '\\') j += 1
+        j < e && jsonString(b, s, e) == "next_page_token" // an escaped spelling
+      }
+
+    /** The quoted JSON string `b[s, e)`, unescaped by Jackson. */
+    def jsonString(b: Array[Byte], s: Int, e: Int): String = {
+      val jp = factory.createParser(b, s, e - s)
+      try { jp.nextToken(); jp.getText } finally jp.close()
+    }
+
+    def endOfInput(where: String) =
+      new IllegalArgumentException(s"page JSON: Unexpected end-of-input $where")
+
+    def tooDeep = new IllegalArgumentException("page JSON nested deeper than 64 levels")
+
+    def unexpected(b: Array[Byte], i: Int, state: Int): Nothing =
+      throw new IllegalArgumentException(
+        if (state == Done) s"page JSON: trailing content after the top-level value at byte $i"
+        else s"page JSON: unexpected '${(b(i) & 0xff).toChar}' at byte $i")
+  }
 
   /** reference: `common.py:25,151-156` */
   val MaxRetries = 3

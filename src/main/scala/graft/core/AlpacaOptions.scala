@@ -222,8 +222,8 @@ object AlpacaOptions {
     * as UTC, matching `pa.timestamp("us", tz="UTC")` semantics. */
   def parseIsoMicros(s: String): Option[Long] = {
     val t = s.trim
-    val fast = parseIsoMicrosFast(t)
-    if (fast.isDefined) return fast
+    val fast = isoMicrosFast(t.toCharArray, 0, t.length)
+    if (fast != NotFast) return Some(fast)
     def toMicros(i: Instant): Long =
       Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
     try Some(toMicros(OffsetDateTime.parse(t).toInstant))
@@ -236,48 +236,51 @@ object AlpacaOptions {
     }
   }
 
-  /** Allocation-free parse of the overwhelmingly-common wire shapes
+  /** [[isoMicrosFast]]'s answer for anything but its wire shapes. */
+  final val NotFast = Long.MinValue
+  private val UtcOffset = "+00:00".toCharArray
+
+  /** Parse of the overwhelmingly-common wire shapes
     * `YYYY-MM-DDTHH:MM:SS[.f{1..6}](Z|+00:00)` (every timestamp the
-    * API emits and this library formats). java.time's general parser
-    * costs ~1 µs per call, which is material at millions of records;
-    * this digit walk is ~30 ns. Anything else falls back. */
-  private def parseIsoMicrosFast(t: String): Option[Long] = {
-    val n = t.length
-    if (n < 19 || t.charAt(4) != '-' || t.charAt(7) != '-' ||
-      (t.charAt(10) != 'T' && t.charAt(10) != ' ') ||
-      t.charAt(13) != ':' || t.charAt(16) != ':') return None
-    var i = 0
-    def d2(at: Int): Int = {
-      val a = t.charAt(at) - '0'; val b = t.charAt(at + 1) - '0'
+    * API emits and this library formats) in `c[off, off + len)`, or
+    * [[NotFast]]. java.time's general parser costs ~1 µs per call,
+    * which is material at millions of records; this digit walk is
+    * tens of ns, and over chars the record walk reads straight from
+    * its JSON parser, no String is built. */
+  def isoMicrosFast(c: Array[Char], off: Int, len: Int): Long = {
+    def at(i: Int): Char = c(off + i)
+    if (len < 19 || at(4) != '-' || at(7) != '-' ||
+      (at(10) != 'T' && at(10) != ' ') ||
+      at(13) != ':' || at(16) != ':') return NotFast
+    def d2(i: Int): Int = {
+      val a = at(i) - '0'; val b = at(i + 1) - '0'
       if (a < 0 || a > 9 || b < 0 || b > 9) -1 else a * 10 + b
     }
     val y1 = d2(0); val y2 = d2(2)
     val mo = d2(5); val da = d2(8)
     val hh = d2(11); val mi = d2(14); val ss = d2(17)
     if (y1 < 0 || y2 < 0 || mo < 1 || mo > 12 || da < 1 || da > 31 ||
-      hh < 0 || hh > 23 || mi < 0 || mi > 59 || ss < 0 || ss > 59) return None
+      hh < 0 || hh > 23 || mi < 0 || mi > 59 || ss < 0 || ss > 59) return NotFast
     val year = y1 * 100 + y2
-    i = 19
+    var i = 19
     var frac = 0L
-    if (i < n && t.charAt(i) == '.') {
+    if (i < len && at(i) == '.') {
       i += 1
       var digits = 0
-      while (i < n && digits < 6 && t.charAt(i) >= '0' && t.charAt(i) <= '9') {
-        frac = frac * 10 + (t.charAt(i) - '0'); i += 1; digits += 1
+      while (i < len && digits < 6 && at(i) >= '0' && at(i) <= '9') {
+        frac = frac * 10 + (at(i) - '0'); i += 1; digits += 1
       }
-      if (digits == 0) return None
+      if (digits == 0) return NotFast
       while (digits < 6) { frac *= 10; digits += 1 }
       // >6 fractional digits (nanos): not our wire format — fall back
-      if (i < n && t.charAt(i) >= '0' && t.charAt(i) <= '9') return None
+      if (i < len && at(i) >= '0' && at(i) <= '9') return NotFast
     }
-    if (i < n) {
-      val rest = t.substring(i)
-      if (rest != "Z" && rest != "+00:00") return None
-    }
+    if (i < len && !(len - i == 1 && at(i) == 'Z') &&
+      !java.util.Arrays.equals(c, off + i, off + len, UtcOffset, 0, UtcOffset.length)) return NotFast
     try {
       val epochDay = java.time.LocalDate.of(year, mo, da).toEpochDay
-      Some(((epochDay * 86400L + hh * 3600L + mi * 60L + ss) * 1000000L) + frac)
-    } catch { case _: java.time.DateTimeException => None } // e.g. Feb 30
+      ((epochDay * 86400L + hh * 3600L + mi * 60L + ss) * 1000000L) + frac
+    } catch { case _: java.time.DateTimeException => NotFast } // e.g. Feb 30
   }
 
   /** Epoch micros → ISO-8601 UTC string (`yyyy-MM-ddTHH:mm:ss.SSSSSS+00:00`,

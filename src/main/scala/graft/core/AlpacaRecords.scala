@@ -200,10 +200,17 @@ trait RecordParser extends Serializable {
     } catch { case _: java.io.IOException => () }
   }
 
+  /** The common wire shapes parse from the parser's own chars; any
+    * other value goes through [[AlpacaOptions.parseIsoMicros]]. */
   protected final def streamTs(jp: JsonParser, key: String): Long = {
-    val raw = jp.getText
-    AlpacaOptions.parseIsoMicros(raw).getOrElse(
-      throw new IllegalArgumentException(s"bad timestamp '$raw' in '$key'"))
+    val fast = AlpacaOptions.isoMicrosFast(
+      jp.getTextCharacters, jp.getTextOffset, jp.getTextLength)
+    if (fast != AlpacaOptions.NotFast) fast
+    else {
+      val raw = jp.getText
+      AlpacaOptions.parseIsoMicros(raw).getOrElse(
+        throw new IllegalArgumentException(s"bad timestamp '$raw' in '$key'"))
+    }
   }
 
   protected final def streamDbl(jp: JsonParser, key: String): Double = {
@@ -218,10 +225,15 @@ trait RecordParser extends Serializable {
     }
   }
 
+  /** An integer outside the 64-bit range is a bad value like any
+    * other: it skips the record instead of failing the task. */
   protected final def streamLng(jp: JsonParser, key: String): Long = {
     import JsonToken._
     jp.currentToken() match {
-      case VALUE_NUMBER_INT => jp.getLongValue
+      case VALUE_NUMBER_INT =>
+        try jp.getLongValue
+        catch { case _: com.fasterxml.jackson.core.exc.InputCoercionException =>
+          throw new IllegalArgumentException(s"bad long '${jp.getText}' in '$key'") }
       case VALUE_NUMBER_FLOAT => jp.getDoubleValue.toLong
       case VALUE_STRING =>
         try jp.getText.toLong
@@ -230,32 +242,6 @@ trait RecordParser extends Serializable {
       case _ => throw new IllegalArgumentException(s"bad long in '$key'")
     }
   }
-
-  /** A string field's value. An object or array where a string belongs
-    * makes the record malformed: the throw lands in the walk's catch,
-    * whose [[skipRecord]] skips the value and realigns to the record's
-    * END_OBJECT — the struct's insides are never read as fields of the
-    * record. */
-  protected final def streamStr(jp: JsonParser, key: String): String =
-    if (jp.currentToken().isStructStart)
-      throw new IllegalArgumentException(s"bad string (object or array) in '$key'")
-    else jp.getText
-
-  /** The condition-code array joined to CSV (`",".join(c)`,
-    * `stocks/trades.py:128`); a value that is not an array reads as no
-    * conditions, like an absent key. */
-  protected final def streamCsv(jp: JsonParser, key: String): String =
-    if (jp.currentToken() != JsonToken.START_ARRAY) {
-      if (jp.currentToken().isStructStart) jp.skipChildren()
-      ""
-    } else {
-      val sb = new java.lang.StringBuilder
-      while (jp.nextToken() != JsonToken.END_ARRAY) {
-        if (sb.length > 0) sb.append(',')
-        sb.append(streamStr(jp, key))
-      }
-      sb.toString
-    }
 
   /** Completeness gate of a token walk: bit i of `seen` is set once
     * `names(i)` was read (null reads as absent); the lowest clear bit
@@ -304,7 +290,15 @@ trait RecordParser extends Serializable {
   * realign before rethrowing so the caller can warn+skip. On failure
   * the row slot may hold partial values — the caller must not advance
   * the row index, so the next record overwrites it. The row entry
-  * points ([[parse]], [[parseStream]]) run the same walk. */
+  * points ([[parse]], [[parseStream]]) run the same walk.
+  *
+  * Pruned fields are validated, not materialized: a pruned double
+  * with a numeric token is type-checked without conversion, and a
+  * pruned string or condition array is checked for struct values
+  * without building any String. Timestamps, integers and
+  * string-encoded numbers are parsed whether projected or not, so
+  * which records are skipped — and so the row count — does not depend
+  * on the projection. */
 trait VectorWriteSupport extends RecordParser {
   /** @param fieldToOut output-vector ordinal for each field of
     *   [[RecordParser.schema]] (−1 = pruned away). `vecs` is indexed
@@ -341,6 +335,66 @@ trait VectorWriteSupport extends RecordParser {
       val b = s.getBytes
       vecs(out).putByteArray(row, b, 0, b.length)
     }
+
+  // One helper per field kind. The parser is ON the field's value
+  // (never VALUE_NULL, which the walks read as absent); `out` is the
+  // field's output ordinal, −1 when pruned.
+
+  /** Timestamp: parsed whatever the projection, written if projected. */
+  protected final def tsField(jp: JsonParser, key: String,
+      vecs: Array[WritableColumnVector], out: Int, row: Int): Unit = {
+    val v = streamTs(jp, key)
+    if (out >= 0) vecs(out).putLong(row, v)
+  }
+
+  /** Integer: parsed whatever the projection (an out-of-range value
+    * skips the record either way), written if projected. */
+  protected final def lngField(jp: JsonParser, key: String,
+      vecs: Array[WritableColumnVector], out: Int, row: Int): Unit = {
+    val v = streamLng(jp, key)
+    if (out >= 0) vecs(out).putLong(row, v)
+  }
+
+  /** Double. Pruned, a numeric token is only type-checked: the lexer
+    * has checked its grammar, so the conversion could not fail. A
+    * string still parses and any other token throws, as when
+    * projected. */
+  protected final def dblField(jp: JsonParser, key: String,
+      vecs: Array[WritableColumnVector], out: Int, row: Int): Unit =
+    if (out >= 0) vecs(out).putDouble(row, streamDbl(jp, key))
+    else if (!jp.currentToken().isNumeric) streamDbl(jp, key)
+
+  /** String: the value's text, or null when pruned (no String built).
+    * An object or array where a string belongs makes the record
+    * malformed either way: the throw lands in the walk's catch, whose
+    * [[RecordParser.skipRecord]] skips the value and realigns to the
+    * record's END_OBJECT — the struct's insides are never read as
+    * fields of the record. */
+  protected final def strField(jp: JsonParser, key: String, out: Int): String =
+    if (jp.currentToken().isStructStart)
+      throw new IllegalArgumentException(s"bad string (object or array) in '$key'")
+    else if (out >= 0) jp.getText
+    else null
+
+  /** The condition-code array joined to CSV (`",".join(c)`,
+    * `stocks/trades.py:128`), or null when pruned; every element is
+    * checked like a [[strField]] either way. A value that is not an
+    * array reads as no conditions, like an absent key. */
+  protected final def csvField(jp: JsonParser, key: String, out: Int): String =
+    if (jp.currentToken() != JsonToken.START_ARRAY) {
+      if (jp.currentToken().isStructStart) jp.skipChildren()
+      ""
+    } else {
+      val sb = if (out >= 0) new java.lang.StringBuilder else null
+      while (jp.nextToken() != JsonToken.END_ARRAY) {
+        val s = strField(jp, key, out)
+        if (sb != null) {
+          if (sb.length > 0) sb.append(',')
+          sb.append(s)
+        }
+      }
+      if (sb == null) null else sb.toString
+    }
 }
 
 /** `{t,o,h,l,c,v,n,vw}` → bar row (reference: `bars.py:199-225`). */
@@ -355,8 +409,6 @@ object BarParser extends RecordParser with VectorWriteSupport {
     * missing-field error. */
   override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
       vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var seen = 0
     try {
       var tk = jp.nextToken()
@@ -365,14 +417,14 @@ object BarParser extends RecordParser with VectorWriteSupport {
         val vt = jp.nextToken()
         if (vt == JsonToken.VALUE_NULL) () // same as absent
         else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "o" => putD(fieldToOut(2), streamDbl(jp, "o")); seen |= 2
-          case "h" => putD(fieldToOut(3), streamDbl(jp, "h")); seen |= 4
-          case "l" => putD(fieldToOut(4), streamDbl(jp, "l")); seen |= 8
-          case "c" => putD(fieldToOut(5), streamDbl(jp, "c")); seen |= 16
-          case "v" => putL(fieldToOut(6), streamLng(jp, "v")); seen |= 32
-          case "n" => putL(fieldToOut(7), streamLng(jp, "n")); seen |= 64
-          case "vw" => putD(fieldToOut(8), streamDbl(jp, "vw")); seen |= 128
+          case "t" => tsField(jp, "t", vecs, fieldToOut(1), row); seen |= 1
+          case "o" => dblField(jp, "o", vecs, fieldToOut(2), row); seen |= 2
+          case "h" => dblField(jp, "h", vecs, fieldToOut(3), row); seen |= 4
+          case "l" => dblField(jp, "l", vecs, fieldToOut(4), row); seen |= 8
+          case "c" => dblField(jp, "c", vecs, fieldToOut(5), row); seen |= 16
+          case "v" => lngField(jp, "v", vecs, fieldToOut(6), row); seen |= 32
+          case "n" => lngField(jp, "n", vecs, fieldToOut(7), row); seen |= 64
+          case "vw" => dblField(jp, "vw", vecs, fieldToOut(8), row); seen |= 128
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
@@ -397,8 +449,6 @@ object TradeParser extends RecordParser with VectorWriteSupport {
     * symbol, time, exchange, price, size, conditions, id, tape. */
   override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
       vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var x: String = null; var z: String = null
     var conditions = ""
     var seen = 0
@@ -409,13 +459,13 @@ object TradeParser extends RecordParser with VectorWriteSupport {
         val vt = jp.nextToken()
         if (vt == JsonToken.VALUE_NULL) () // absent/null → default or missing
         else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "x" => x = streamStr(jp, "x"); seen |= 2
-          case "p" => putD(fieldToOut(3), streamDbl(jp, "p")); seen |= 4
-          case "s" => putL(fieldToOut(4), streamLng(jp, "s")); seen |= 8
-          case "i" => putL(fieldToOut(6), streamLng(jp, "i")); seen |= 16
-          case "z" => z = streamStr(jp, "z"); seen |= 32
-          case "c" => conditions = streamCsv(jp, "c")
+          case "t" => tsField(jp, "t", vecs, fieldToOut(1), row); seen |= 1
+          case "x" => x = strField(jp, "x", fieldToOut(2)); seen |= 2
+          case "p" => dblField(jp, "p", vecs, fieldToOut(3), row); seen |= 4
+          case "s" => lngField(jp, "s", vecs, fieldToOut(4), row); seen |= 8
+          case "i" => lngField(jp, "i", vecs, fieldToOut(6), row); seen |= 16
+          case "z" => z = strField(jp, "z", fieldToOut(7)); seen |= 32
+          case "c" => conditions = csvField(jp, "c", fieldToOut(5))
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
@@ -443,8 +493,6 @@ object CryptoTradeParser extends RecordParser with VectorWriteSupport {
     * written only after the record validates. */
   override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
       vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var tks: String = null
     var seen = 0
     try {
@@ -454,11 +502,11 @@ object CryptoTradeParser extends RecordParser with VectorWriteSupport {
         val vt = jp.nextToken()
         if (vt == JsonToken.VALUE_NULL) ()
         else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "p" => putD(fieldToOut(2), streamDbl(jp, "p")); seen |= 2
-          case "s" => putD(fieldToOut(3), streamDbl(jp, "s")); seen |= 4
-          case "i" => putL(fieldToOut(4), streamLng(jp, "i")); seen |= 8
-          case "tks" => tks = streamStr(jp, "tks"); seen |= 16
+          case "t" => tsField(jp, "t", vecs, fieldToOut(1), row); seen |= 1
+          case "p" => dblField(jp, "p", vecs, fieldToOut(2), row); seen |= 2
+          case "s" => dblField(jp, "s", vecs, fieldToOut(3), row); seen |= 4
+          case "i" => lngField(jp, "i", vecs, fieldToOut(4), row); seen |= 8
+          case "tks" => tks = strField(jp, "tks", fieldToOut(5)); seen |= 16
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
@@ -483,8 +531,6 @@ object StockQuoteParser extends RecordParser with VectorWriteSupport {
     * written only after the record validates. */
   override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
       vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var ax: String = null; var bx: String = null; var z: String = null
     var conditions = ""
     var seen = 0
@@ -495,15 +541,15 @@ object StockQuoteParser extends RecordParser with VectorWriteSupport {
         val vt = jp.nextToken()
         if (vt == JsonToken.VALUE_NULL) ()
         else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "ax" => ax = streamStr(jp, "ax"); seen |= 2
-          case "ap" => putD(fieldToOut(3), streamDbl(jp, "ap")); seen |= 4
-          case "as" => putL(fieldToOut(4), streamLng(jp, "as")); seen |= 8
-          case "bx" => bx = streamStr(jp, "bx"); seen |= 16
-          case "bp" => putD(fieldToOut(6), streamDbl(jp, "bp")); seen |= 32
-          case "bs" => putL(fieldToOut(7), streamLng(jp, "bs")); seen |= 64
-          case "z" => z = streamStr(jp, "z"); seen |= 128
-          case "c" => conditions = streamCsv(jp, "c")
+          case "t" => tsField(jp, "t", vecs, fieldToOut(1), row); seen |= 1
+          case "ax" => ax = strField(jp, "ax", fieldToOut(2)); seen |= 2
+          case "ap" => dblField(jp, "ap", vecs, fieldToOut(3), row); seen |= 4
+          case "as" => lngField(jp, "as", vecs, fieldToOut(4), row); seen |= 8
+          case "bx" => bx = strField(jp, "bx", fieldToOut(5)); seen |= 16
+          case "bp" => dblField(jp, "bp", vecs, fieldToOut(6), row); seen |= 32
+          case "bs" => lngField(jp, "bs", vecs, fieldToOut(7), row); seen |= 64
+          case "z" => z = strField(jp, "z", fieldToOut(9)); seen |= 128
+          case "c" => conditions = csvField(jp, "c", fieldToOut(8))
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
@@ -529,8 +575,6 @@ object CryptoQuoteParser extends RecordParser with VectorWriteSupport {
     * ask_size. */
   override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
       vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var seen = 0
     try {
       var tk = jp.nextToken()
@@ -539,11 +583,11 @@ object CryptoQuoteParser extends RecordParser with VectorWriteSupport {
         val vt = jp.nextToken()
         if (vt == JsonToken.VALUE_NULL) ()
         else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "bp" => putD(fieldToOut(2), streamDbl(jp, "bp")); seen |= 2
-          case "bs" => putD(fieldToOut(3), streamDbl(jp, "bs")); seen |= 4
-          case "ap" => putD(fieldToOut(4), streamDbl(jp, "ap")); seen |= 8
-          case "as" => putD(fieldToOut(5), streamDbl(jp, "as")); seen |= 16
+          case "t" => tsField(jp, "t", vecs, fieldToOut(1), row); seen |= 1
+          case "bp" => dblField(jp, "bp", vecs, fieldToOut(2), row); seen |= 2
+          case "bs" => dblField(jp, "bs", vecs, fieldToOut(3), row); seen |= 4
+          case "ap" => dblField(jp, "ap", vecs, fieldToOut(4), row); seen |= 8
+          case "as" => dblField(jp, "as", vecs, fieldToOut(5), row); seen |= 16
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
@@ -568,8 +612,6 @@ object OptionTradeParser extends RecordParser with VectorWriteSupport {
     * strings written only after the record validates. */
   override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
       vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var x: String = null; var condition = ""
     var seen = 0
     try {
@@ -579,11 +621,11 @@ object OptionTradeParser extends RecordParser with VectorWriteSupport {
         val vt = jp.nextToken()
         if (vt == JsonToken.VALUE_NULL) ()
         else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "x" => x = streamStr(jp, "x"); seen |= 2
-          case "p" => putD(fieldToOut(3), streamDbl(jp, "p")); seen |= 4
-          case "s" => putL(fieldToOut(4), streamLng(jp, "s")); seen |= 8
-          case "c" => condition = streamStr(jp, "c")
+          case "t" => tsField(jp, "t", vecs, fieldToOut(1), row); seen |= 1
+          case "x" => x = strField(jp, "x", fieldToOut(2)); seen |= 2
+          case "p" => dblField(jp, "p", vecs, fieldToOut(3), row); seen |= 4
+          case "s" => lngField(jp, "s", vecs, fieldToOut(4), row); seen |= 8
+          case "c" => condition = strField(jp, "c", fieldToOut(5))
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()
@@ -608,8 +650,6 @@ object OptionQuoteParser extends RecordParser with VectorWriteSupport {
     * bid_exchange, bid_price, bid_size, condition. */
   override def parseIntoVectors(symbol: UTF8String, jp: JsonParser,
       vecs: Array[WritableColumnVector], fieldToOut: Array[Int], row: Int): Unit = {
-    def putD(out: Int, v: Double): Unit = if (out >= 0) vecs(out).putDouble(row, v)
-    def putL(out: Int, v: Long): Unit = if (out >= 0) vecs(out).putLong(row, v)
     var ax: String = null; var bx: String = null; var condition = ""
     var seen = 0
     try {
@@ -619,14 +659,14 @@ object OptionQuoteParser extends RecordParser with VectorWriteSupport {
         val vt = jp.nextToken()
         if (vt == JsonToken.VALUE_NULL) ()
         else name match {
-          case "t" => putL(fieldToOut(1), streamTs(jp, "t")); seen |= 1
-          case "ax" => ax = streamStr(jp, "ax"); seen |= 2
-          case "ap" => putD(fieldToOut(3), streamDbl(jp, "ap")); seen |= 4
-          case "as" => putL(fieldToOut(4), streamLng(jp, "as")); seen |= 8
-          case "bx" => bx = streamStr(jp, "bx"); seen |= 16
-          case "bp" => putD(fieldToOut(6), streamDbl(jp, "bp")); seen |= 32
-          case "bs" => putL(fieldToOut(7), streamLng(jp, "bs")); seen |= 64
-          case "c" => condition = streamStr(jp, "c")
+          case "t" => tsField(jp, "t", vecs, fieldToOut(1), row); seen |= 1
+          case "ax" => ax = strField(jp, "ax", fieldToOut(2)); seen |= 2
+          case "ap" => dblField(jp, "ap", vecs, fieldToOut(3), row); seen |= 4
+          case "as" => lngField(jp, "as", vecs, fieldToOut(4), row); seen |= 8
+          case "bx" => bx = strField(jp, "bx", fieldToOut(5)); seen |= 16
+          case "bp" => dblField(jp, "bp", vecs, fieldToOut(6), row); seen |= 32
+          case "bs" => lngField(jp, "bs", vecs, fieldToOut(7), row); seen |= 64
+          case "c" => condition = strField(jp, "c", fieldToOut(8))
           case _ => if (vt.isStructStart) jp.skipChildren()
         }
         tk = jp.nextToken()

@@ -466,6 +466,32 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(drifted == clean, "extra unknown keys changed parsed values")
   }
 
+  test("column pruning does not change which records are skipped (MALFORMED, DRIFTEXTRA)") {
+    // collect(), not count(): a count prunes to no columns, which the
+    // scan reads as the full schema, so only a projection reaches the
+    // pruned decode
+    Seq(hostileReader("MALFORMED"), hostileReader("DRIFTEXTRA").option("limit", "7"))
+      .foreach { reader =>
+        val df = reader.load()
+        val counts = df.count() +: Seq(Seq("close"), Seq("symbol"), Seq("time", "volume"))
+          .map(cols => df.select(cols.map(col): _*).collect().length.toLong)
+        assert(counts == Seq.fill(4)(24L), s"pruned and unpruned reads differ: $counts")
+      }
+  }
+
+  test("recordsSkipped scan metric counts the malformed-record skips") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def skipped(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
+      df.collect()
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case s: BatchScanExec => s.metrics("recordsSkipped").value
+      }
+    }
+    assert(skipped(hostileReader("MALFORMED").load()) == Seq(1L))
+    assert(skipped(barsReader().load()) == Seq(0L))
+  }
+
   test("mid-stream schema drift: missing OPTIONAL key takes its default (subtractive)") {
     // from the second page on, trade records omit the optional `c`
     // (conditions) key entirely; the contract (reference .get default,

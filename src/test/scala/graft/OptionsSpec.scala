@@ -80,7 +80,12 @@ class OptionsSpec extends AnyFunSuite {
       assert(AlpacaOptions.parseIsoMicros(mine).contains(us), s"roundtrip $mine")
       // the Z form parses identically
       assert(AlpacaOptions.parseIsoMicros(mine.replace("+00:00", "Z")).contains(us))
+      // so does the char slice the record walk reads from its JSON parser
+      assert(AlpacaOptions.isoMicrosFast(("[\"" + mine + "\"]").toCharArray, 2, mine.length) == us)
     }
+    // an offset other than UTC is not a fast shape
+    assert(AlpacaOptions.isoMicrosFast("2021-01-01T00:00:00+01:00".toCharArray, 0, 25) ==
+      AlpacaOptions.NotFast)
     // fractional widths 1..6 + no-fraction forms
     (1 to 6).foreach { w =>
       val frac = "123456".take(w)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{BarParser, CorporateActionParser, TradeParser}
+import graft.core.{BarParser, CorporateActionParser, TradeParser, VectorWriteSupport}
 
 /** Golden-tuple parser tests mirroring the reference's fixture corpus
   * (`tests/fixtures/mock_responses.py`, parsers `bars.py:199-225`,
@@ -387,6 +387,68 @@ class ParserGoldenSpec extends AnyFunSuite {
       OptionQuoteParser -> s"""{$t, "ax": "A", "ap": 1.0, "as": 1, "bx": "B", "bp": 1.0, "bs": 1, "c": ["I"]}""")
     cases.foreach { case (p, rec) =>
       intercept[IllegalArgumentException](p.parse("X", js(rec)))
+      // pruned away, the string field is still checked
+      assertSkipped(p, rec, Array.fill(p.schema.length)(-1))
+    }
+  }
+
+  /** `rec` through `p`'s vector walk under `fieldToOut` must throw for
+    * warn-and-skip and leave the stream ON the record's END_OBJECT. */
+  private def assertSkipped(p: VectorWriteSupport, rec: String, fieldToOut: Array[Int]): String = {
+    val jp = mapper.createParser(rec)
+    assert(jp.nextToken() == JsonToken.START_OBJECT)
+    val e = intercept[IllegalArgumentException] {
+      p.parseIntoVectors(UTF8String.fromString("X"), jp, vectors(p.schema), fieldToOut, 0)
+    }
+    assert(jp.currentToken() == JsonToken.END_OBJECT, rec)
+    e.getMessage
+  }
+
+  test("out-of-range integer skips the record instead of failing the task") {
+    val rec = """{"t": "2021-01-01T09:30:00Z", "o": 1.0, "h": 1.0, "l": 1.0, "c": 1.0,
+      |"v": 99999999999999999999, "n": 1, "vw": 1.0}""".stripMargin
+    val all = BarParser.schema.fields.indices.toArray
+    assert(assertSkipped(BarParser, rec, all).contains("bad long"))
+    // integers are parsed whatever the projection: pruning `volume`
+    // keeps the skip
+    assert(assertSkipped(BarParser, rec, all.updated(6, -1)).contains("bad long"))
+  }
+
+  test("every flat parser skips a bad pruned numeric field like a projected one") {
+    import graft.core.{CryptoQuoteParser, CryptoTradeParser, OptionQuoteParser,
+      OptionTradeParser, StockQuoteParser}
+    val t = "\"t\": \"2021-01-01T09:30:00Z\""
+    // (parser, well-formed record, numeric fields with their schema ordinals)
+    val cases: Seq[(VectorWriteSupport, String, Seq[(String, Int)])] = Seq(
+      (BarParser, s"""{$t, "o": 1.0, "h": 2.0, "l": 0.5, "c": 1.5, "v": 10, "n": 3, "vw": 1.25}""",
+        Seq("o" -> 2, "h" -> 3, "l" -> 4, "c" -> 5, "v" -> 6, "n" -> 7, "vw" -> 8)),
+      (TradeParser, s"""{$t, "x": "V", "p": 1.0, "s": 1, "c": ["@"], "i": 1, "z": "C"}""",
+        Seq("p" -> 3, "s" -> 4, "i" -> 6)),
+      (CryptoTradeParser, s"""{$t, "p": 1.0, "s": 0.5, "i": 1, "tks": "B"}""",
+        Seq("p" -> 2, "s" -> 3, "i" -> 4)),
+      (StockQuoteParser, s"""{$t, "ax": "Q", "ap": 1.0, "as": 1, "bx": "N", "bp": 1.0, "bs": 1, "c": ["R"], "z": "C"}""",
+        Seq("ap" -> 3, "as" -> 4, "bp" -> 6, "bs" -> 7)),
+      (CryptoQuoteParser, s"""{$t, "bp": 1.0, "bs": 1.5, "ap": 2.0, "as": 0.25}""",
+        Seq("bp" -> 2, "bs" -> 3, "ap" -> 4, "as" -> 5)),
+      (OptionTradeParser, s"""{$t, "x": "A", "p": 2.25, "s": 3, "c": "I"}""",
+        Seq("p" -> 3, "s" -> 4)),
+      (OptionQuoteParser, s"""{$t, "ax": "A", "ap": 2.75, "as": 7, "bx": "B", "bp": 2.25, "bs": 4, "c": "I"}""",
+        Seq("ap" -> 3, "as" -> 4, "bp" -> 6, "bs" -> 7)))
+    cases.foreach { case (p, good, fields) =>
+      val all = p.schema.fields.indices.toArray
+      fields.foreach { case (key, ord) =>
+        val pruned = all.updated(ord, -1)
+        val goodJp = mapper.createParser(good)
+        goodJp.nextToken()
+        p.parseIntoVectors(UTF8String.fromString("X"), goodJp, vectors(p.schema), pruned, 0)
+        assert(goodJp.currentToken() == JsonToken.END_OBJECT)
+        Seq("\"abc\"", "{\"x\": 1}", "[1]", "true").foreach { bad =>
+          val rec = good.replaceFirst(s""""$key": [^,}]+""", s""""$key": $bad""")
+          assert(rec != good)
+          assertSkipped(p, rec, all)
+          assertSkipped(p, rec, pruned)
+        }
+      }
     }
   }
 }
