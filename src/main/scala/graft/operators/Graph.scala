@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
  * parity is structural, not numeric.
  */
 object Graph {
-  import Tables.t
+  import Tables.{ckpt, t}
 
   private val PrefixLen = 20
   private val BucketCap = 100L
@@ -93,13 +93,9 @@ object Graph {
     // THREE times; without materialization each reference re-derives
     // the full candidate-generation + degree lineage (measured: 40
     // parquet rescans, 4× wall time at sf0.001) — the same
-    // lineage-blowup clustersCore checkpoints away. Reliable
-    // checkpoint when the cluster configures one, executor-local
-    // otherwise; at 100 TB the oriented edge list is the artifact
+    // lineage-blowup the star-contraction CC checkpoints away
+    // (Tables.ckpt); at 100 TB the oriented edge list is the artifact
     // you'd persist to a table anyway.
-    def ckpt(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val d = ckpt(orientByDegree(e))
     val tri = orientedWedges(d)
       .join(d.as("e3").hint("merge"),
@@ -171,7 +167,7 @@ object Graph {
     // the DISTINCT — safe solely because `edges` is bucket-capped at
     // BucketCap ($BucketCap ⇒ cliques ≤ cap ⇒ ≤ cap^4 paths/source).
     // An uncapped edge list must NOT be fed through this query; use
-    // the iterative HashMin form (clustersCore) instead.
+    // the star-contraction CC (Dedup.clustersFromPairs) instead.
     try {
       spark.sql(
         s"""WITH RECURSIVE reach(src, node, d) AS (
@@ -229,15 +225,12 @@ object Graph {
     * distributed PageRank step. Rank relations are |V|-linear and
     * merge-pinned (never broadcast). Unrolled because the iteration
     * count is a constant of the gate; an open-ended convergence loop
-    * would checkpoint per round like clustersCore. */
+    * would checkpoint per round like Dedup.clustersFromPairs. */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     val e = edges(spark, dir)
     val eb = e.select(col("a").as("s"), col("b").as("dst"))
       .union(e.select(col("b").as("s"), col("a").as("dst")))
     val deg = eb.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-    def ckpt(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val g = ckpt(eb.join(deg.hint("merge"), Seq("s")))
     val nodes = ckpt(g.select(col("s").as("node")).distinct())
     var rank = nodes.withColumn("rank", lit(PrScale))

@@ -18,15 +18,28 @@ import org.apache.spark.sql.functions._
  * Double stats are min/max (order-independent); sums are integral.
  */
 object Pipeline {
+  import MinHashLsh.{Prod, Small}
 
   private val QualityBar = 0.55
-  private val DedupThreshold = 0.5
 
   def curate(spark: SparkSession, dir: String): DataFrame = {
     val quality = TextOps.qualityCore(spark, dir)
-    val dropped = Dedup.minhashPairsCore(spark, dir)
-      .filter(col("est_jaccard") >= DedupThreshold)
+    val dropped = Small.pairs(Tables.t(spark, dir, "documents"))
+      .filter(col("est_jaccard") >= Small.threshold)
       .select(col("doc_b").as("doc_id")).distinct()
+    curatedReport(quality, dropped)
+  }
+
+  val curateSql: String =
+    curatedReportSql(Small.pairsCtes,
+      s"""dropped AS (
+         |  SELECT DISTINCT doc_b AS doc_id FROM est_pairs
+         |  WHERE est_jaccard >= ${Small.threshold})""".stripMargin)
+
+  /** The curation tail every curate gate shares: anti-join the drop
+    * list, keep documents above the quality bar, and report corpus
+    * stats per predicted language. */
+  private def curatedReport(quality: DataFrame, dropped: DataFrame): DataFrame = {
     val predicted = when(col("stop_ratio") >= 0.06, lit("en"))
       .otherwise(lit("unk")).as("predicted_lang")
     quality
@@ -42,12 +55,12 @@ object Pipeline {
       .orderBy(col("predicted_lang"))
   }
 
-  val curateSql: String =
-    s"""WITH ${Dedup.minhashPairsCtes},
-       |dropped AS (
-       |  SELECT DISTINCT doc_b AS doc_id FROM est_pairs
-       |  WHERE est_jaccard >= $DedupThreshold),
+  /** Oracle of [[curatedReport]]: `dedupCtes` (a MinHash CTE bundle),
+    * the `quality` CTE, then `dropCtes` ending in `dropped` (doc_id). */
+  private def curatedReportSql(dedupCtes: String, dropCtes: String): String =
+    s"""WITH RECURSIVE $dedupCtes,
        |quality AS (${TextOps.qualitySelectSql}),
+       |$dropCtes,
        |curated AS (
        |  SELECT doc_id, n_chars_actual, quality_score,
        |    CASE WHEN stop_ratio >= 0.06 THEN 'en' ELSE 'unk' END AS predicted_lang
@@ -68,39 +81,15 @@ object Pipeline {
     * `dedup_clusters` fixpoint instead of raw pairs. */
   def curateCc(spark: SparkSession, dir: String): DataFrame = {
     val quality = TextOps.qualityCore(spark, dir)
-    val dropped = Dedup.clustersCore(spark, dir)
+    val dropped = Small.clusters(Tables.t(spark, dir, "documents"))
       .filter(col("label") =!= col("node"))
       .select(col("node").as("doc_id"))
-    val predicted = when(col("stop_ratio") >= 0.06, lit("en"))
-      .otherwise(lit("unk")).as("predicted_lang")
-    quality
-      .join(dropped, Seq("doc_id"), "left_anti")
-      .filter(col("quality_score") >= QualityBar)
-      .select(col("doc_id"), col("n_chars_actual"), col("quality_score"),
-        predicted)
-      .groupBy(col("predicted_lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars_actual")).as("sum_chars"),
-        min(col("quality_score")).as("min_quality"),
-        max(col("quality_score")).as("max_quality"))
-      .orderBy(col("predicted_lang"))
+    curatedReport(quality, dropped)
   }
 
   val curateCcSql: String =
-    s"""WITH RECURSIVE ${Dedup.clusterCtes},
-       |dropped AS (SELECT node AS doc_id FROM labels WHERE label <> node),
-       |quality AS (${TextOps.qualitySelectSql}),
-       |curated AS (
-       |  SELECT doc_id, n_chars_actual, quality_score,
-       |    CASE WHEN stop_ratio >= 0.06 THEN 'en' ELSE 'unk' END AS predicted_lang
-       |  FROM quality
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-       |    AND quality_score >= $QualityBar)
-       |SELECT predicted_lang, COUNT(*) AS n_docs, CAST(SUM(n_chars_actual) AS BIGINT) AS sum_chars,
-       |  MIN(quality_score) AS min_quality, MAX(quality_score) AS max_quality
-       |FROM curated
-       |GROUP BY predicted_lang
-       |ORDER BY predicted_lang""".stripMargin
+    curatedReportSql(Small.clusterCtes,
+      "dropped AS (SELECT node AS doc_id FROM labels WHERE label <> node)")
 
   /** Curation with QUALITY-BEST representatives: [[curateCc]] keeps
     * each component's minimum-id member — an arbitrary convention
@@ -123,48 +112,24 @@ object Pipeline {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("label"))
       .orderBy(coalesce(col("quality_score"), lit(-1e308)).desc, col("doc_id"))
-    val dropped = Dedup.clustersCore(spark, dir)
+    val dropped = Small.clusters(Tables.t(spark, dir, "documents"))
       .join(quality.select(col("doc_id"), col("quality_score")),
         col("node") === col("doc_id"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") =!= 1)
       .select(col("node").as("doc_id"))
-    val predicted = when(col("stop_ratio") >= 0.06, lit("en"))
-      .otherwise(lit("unk")).as("predicted_lang")
-    quality
-      .join(dropped, Seq("doc_id"), "left_anti")
-      .filter(col("quality_score") >= QualityBar)
-      .select(col("doc_id"), col("n_chars_actual"), col("quality_score"),
-        predicted)
-      .groupBy(col("predicted_lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars_actual")).as("sum_chars"),
-        min(col("quality_score")).as("min_quality"),
-        max(col("quality_score")).as("max_quality"))
-      .orderBy(col("predicted_lang"))
+    curatedReport(quality, dropped)
   }
 
   val curateBestSql: String =
-    s"""WITH RECURSIVE ${Dedup.clusterCtes},
-       |quality AS (${TextOps.qualitySelectSql}),
-       |member AS (
-       |  SELECT l.label, l.node, q.quality_score,
-       |    ROW_NUMBER() OVER (
-       |      PARTITION BY l.label
-       |      ORDER BY COALESCE(q.quality_score, -1e308) DESC, l.node) AS rn
-       |  FROM labels l JOIN quality q ON l.node = q.doc_id),
-       |dropped AS (SELECT node AS doc_id FROM member WHERE rn <> 1),
-       |curated AS (
-       |  SELECT doc_id, n_chars_actual, quality_score,
-       |    CASE WHEN stop_ratio >= 0.06 THEN 'en' ELSE 'unk' END AS predicted_lang
-       |  FROM quality
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-       |    AND quality_score >= $QualityBar)
-       |SELECT predicted_lang, COUNT(*) AS n_docs, CAST(SUM(n_chars_actual) AS BIGINT) AS sum_chars,
-       |  MIN(quality_score) AS min_quality, MAX(quality_score) AS max_quality
-       |FROM curated
-       |GROUP BY predicted_lang
-       |ORDER BY predicted_lang""".stripMargin
+    curatedReportSql(Small.clusterCtes,
+      """member AS (
+        |  SELECT l.label, l.node, q.quality_score,
+        |    ROW_NUMBER() OVER (
+        |      PARTITION BY l.label
+        |      ORDER BY COALESCE(q.quality_score, -1e308) DESC, l.node) AS rn
+        |  FROM labels l JOIN quality q ON l.node = q.doc_id),
+        |dropped AS (SELECT node AS doc_id FROM member WHERE rn <> 1)""".stripMargin)
 
   /** Train/test CONTAMINATION check — the audit every training
     * pipeline needs after splitting: near-duplicate pairs whose
@@ -180,8 +145,8 @@ object Pipeline {
       .select(col("doc_id"),
         when(h < 80, lit("train")).when(h < 90, lit("val"))
           .otherwise(lit("test")).as("split"))
-    Dedup.minhashPairsCore(spark, dir)
-      .filter(col("est_jaccard") >= DedupThreshold)
+    Small.pairs(Tables.t(spark, dir, "documents"))
+      .filter(col("est_jaccard") >= Small.threshold)
       .join(splits.withColumnRenamed("doc_id", "a_id")
         .withColumnRenamed("split", "split_a"), col("doc_a") === col("a_id"))
       .join(splits.withColumnRenamed("doc_id", "b_id")
@@ -193,7 +158,7 @@ object Pipeline {
   }
 
   val contaminationSql: String =
-    s"""WITH ${Dedup.minhashPairsCtes},
+    s"""WITH ${Small.pairsCtes},
        |splits AS (
        |  SELECT doc_id,
        |    CASE WHEN ('0x' || SUBSTR(md5(text), 1, 4))::INT % 100 < 80 THEN 'train'
@@ -204,7 +169,7 @@ object Pipeline {
        |FROM est_pairs
        |JOIN splits sa ON doc_a = sa.doc_id
        |JOIN splits sb ON doc_b = sb.doc_id
-       |WHERE est_jaccard >= $DedupThreshold AND sa.split <> sb.split
+       |WHERE est_jaccard >= ${Small.threshold} AND sa.split <> sb.split
        |ORDER BY doc_a, doc_b""".stripMargin
 
   // ------------------------------------------- hybrid two-signal dedup
@@ -229,7 +194,7 @@ object Pipeline {
     import graft.functions.VectorFunctions.dotF
     val emb = Tables.t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    Dedup.minhashPairsCore(spark, dir)
+    Small.pairs(Tables.t(spark, dir, "documents"))
       .filter(col("est_jaccard") >= HybridJaccard)
       .join(emb.select(col("vec_id").as("doc_a"), col("embedding").as("ea")), "doc_a")
       .join(emb.select(col("vec_id").as("doc_b"), col("embedding").as("eb")), "doc_b")
@@ -244,7 +209,7 @@ object Pipeline {
   }
 
   val dedupHybridSql: String =
-    s"""WITH ${Dedup.minhashPairsCtes},
+    s"""WITH ${Small.pairsCtes},
        |cand AS (
        |  SELECT doc_a, doc_b, est_jaccard FROM est_pairs
        |  WHERE est_jaccard >= $HybridJaccard),
@@ -530,7 +495,7 @@ object Pipeline {
     // mirror — one call per micro-batch) pass the PERSISTED corpus
     // band index so per-batch work is O(delta); the batch gate derives
     // it in-plan (one call, one scan — filter-before-shingle).
-    val keep = Dedup.incrementalStatusAgainst(deltaDocs,
+    val keep = Prod.probe(Prod.bandsOf(deltaDocs),
         corpusBands.getOrElse(Dedup.corpusBandIndex(spark, dir)))
       .filter(col("status") === "new")
       .select(col("doc_id"))
@@ -567,20 +532,14 @@ object Pipeline {
       .orderBy(col("source"), col("shard_id"))
   }
 
-  /** Oracle recomposition: the incremental-prod CTE bundle supplies
+  /** Oracle recomposition: the delta-probe CTE bundle supplies
     * the keep-set; decontam is restated in its exact (Bloom-free)
     * form with dd-prefixed CTE names (the shingle bundle already owns
     * the generic ones); packing mirrors the per-source window. */
   val dailyDeltaSql: String = {
     val k5 = TextOps.DecontamN
-    s"""WITH ${Dedup.incrementalProdCtes},
-       |dup_delta AS (
-       |  SELECT DISTINCT b_doc AS doc_id FROM est
-       |  WHERE ej >= ${Dedup.ProdClusterThreshold}),
-       |keepset AS (
-       |  SELECT doc_id FROM sigs
-       |  WHERE doc_id % 5 = 0
-       |    AND doc_id NOT IN (SELECT doc_id FROM dup_delta)),
+    s"""WITH ${Dedup.deltaProbeCtes(Prod)},
+       |keepset AS (SELECT doc_id FROM status WHERE status = 'new'),
        |dd AS (
        |  SELECT doc_id,
        |    CASE WHEN ('0x' || SUBSTR(md5(text), 1, 4))::INT % 100 < 80 THEN 'train'

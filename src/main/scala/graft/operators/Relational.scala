@@ -56,6 +56,13 @@ object Tables {
     val dp = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= dp) df else df.repartition(dp, key)
   }
+
+  /** Materializes `df` and cuts its lineage: a reliable (HDFS/S3)
+    * checkpoint when the cluster has a checkpoint dir set — survives
+    * executor loss — and an executor-local one otherwise. */
+  def ckpt(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 }
 
 /**

@@ -702,60 +702,46 @@ object Streaming {
     * PER-ROW projection (array_min over the shingle array per
     * permutation, two md5s per shingle via the same
     * Kirsch–Mitzenmacher halves), which is bit-identical to
-    * `Dedup.sigDf`'s aggregate because min over the same distinct
+    * [[MinHashLsh.sigs]]'s aggregate because min over the same distinct
     * shingle set is min. Bands explode stateless, the stream-static
     * band join holds NO stream state (static joins are stateless on
     * the stream side), and the single aggregation counts band-level
     * matches — a multiset independent of micro-batch arrival order,
     * so the batch oracle matches exactly. The near-dup test is the
-    * INTEGER form eq ≥ 8 (≡ est_jaccard ≥ 0.5): no division anywhere.
+    * INTEGER form eq ≥ [[MinHashLsh.nearDupCount]] (≡ est_jaccard ≥
+    * the point's threshold): no division anywhere.
     *
     * Scale: per-row signatures trade one pass of per-row md5 work for
     * zero stream state — the right trade in flight (state is the
     * scarce resource; the corpus index is the static side, bucketed
     * on the band hash at 100 TB). */
   def streamMinhashDedup(spark: SparkSession, dir: String): DataFrame = {
-    val corpusB = Dedup.bandDf(Dedup.sigDf(spark, dir))
+    val p = MinHashLsh.Small
+    val corpusB = p.bandsOf(Tables.t(spark, dir, "documents"))
       .filter(col("doc_id") % 5 =!= 0)
       .select(col("band_id").as("c_band_id"), col("bh").as("c_bh"),
         col("sigs").as("c_sigs"))
     val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val h1 = "CAST(conv(substring(md5(s), 1, 14), 16, 10) AS BIGINT)"
-    val h2 = "CAST(conv(substring(md5(s), 17, 14), 16, 10) AS BIGINT)"
-    val deltaBands = spark.readStream
+    val deltaDocs = Dedup.withShingleArray(spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
       .filter(col("doc_id") % 5 === 0)
       // parallelism floor on the STREAM side (opt r14, guide §2.5):
       // the one-file micro-batch scans as a single partition, so the
-      // per-row signature pipeline below (2 md5/shingle + 16 array_min
-      // folds) ran serially — measured 2.5–3.0 s of the gate's ~3.7 s
-      // adjusted time in one task. Stateless shuffle of ~0.6 KB/doc
-      // text, same width rule as the batch shingle floor.
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 3)
-      .withColumn("shingles", expr(
-        "array_distinct(transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2])))"))
-      .withColumn("hs", expr(
-        s"transform(shingles, s -> array($h1, $h2))"))
-      .withColumn("sigs", expr(
-        "transform(sequence(1, 16), k -> array_min(transform(hs, h -> h[0] + CAST(k AS BIGINT) * h[1])))"))
-      .withColumn("band", explode(expr(
-        """transform(sequence(0, 3), b -> named_struct(
-          |  'band_id', b,
-          |  'bh', md5(concat_ws('|',
-          |    CAST(sigs[b*4] AS STRING), CAST(sigs[b*4+1] AS STRING),
-          |    CAST(sigs[b*4+2] AS STRING), CAST(sigs[b*4+3] AS STRING)))))""".stripMargin)))
-      .select(col("doc_id"), col("band.band_id").as("band_id"),
-        col("band.bh").as("bh"), col("sigs"))
+      // per-row signature pipeline below (2 md5/shingle + one
+      // array_min fold per permutation) ran serially — measured
+      // 2.5–3.0 s of the gate's ~3.7 s adjusted time in one task.
+      // Stateless shuffle of ~0.6 KB/doc text, same width rule as the
+      // batch shingle floor.
+      .repartition(spark.sparkContext.defaultParallelism, col("doc_id")))
+    val deltaBands = p.rowBanded(p.withRowSigs(deltaDocs))
     val eq = graft.functions.VectorFunctions.matchCountF(col("sigs"), col("c_sigs"))
     val agg = deltaBands
       .join(corpusB,
         col("band_id") === col("c_band_id") && col("bh") === col("c_bh"))
       .select(col("band_id"),
-        when(eq >= 8, 1L).otherwise(0L).as("nd"))
+        when(eq >= p.nearDupCount, 1L).otherwise(0L).as("nd"))
       .groupBy(col("band_id"))
       .agg(count(lit(1)).as("n_candidates"), sum(col("nd")).as("n_near_dups"))
     drainToTable(spark, agg, "complete",
@@ -766,16 +752,13 @@ object Streaming {
   }
 
   val streamMinhashDedupSql: String = {
-    val eqSum = (1 to 16)
-      .map(k => s"CASE WHEN sa.s$k = sc.s$k THEN 1 ELSE 0 END").mkString(" + ")
-    s"""WITH ${Dedup.shingleCte},
-       |${Dedup.sigCte},
-       |${Dedup.bandCte},
+    val p = MinHashLsh.Small
+    s"""WITH ${p.bandsCtes},
        |sb AS (SELECT * FROM bands WHERE doc_id % 5 = 0),
        |cb AS (SELECT * FROM bands WHERE doc_id % 5 <> 0),
        |m AS (
        |  SELECT s.band_id,
-       |    CASE WHEN ($eqSum) >= 8 THEN 1 ELSE 0 END AS nd
+       |    CASE WHEN (${p.eqSql("sa", "sc")}) >= ${p.nearDupCount} THEN 1 ELSE 0 END AS nd
        |  FROM sb s JOIN cb c ON s.band_id = c.band_id AND s.bh = c.bh
        |  JOIN sigs sa ON s.doc_id = sa.doc_id
        |  JOIN sigs sc ON c.doc_id = sc.doc_id)
@@ -850,16 +833,20 @@ object Streaming {
     // build (or reuse) the persisted corpus band index BEFORE the
     // stream starts — each micro-batch then probes the bucketed
     // table; no corpus shingle scan inside any batch plan (r13)
-    val corpusIdx = Dedup.persistedCorpusIndex(spark, staticDir)
+    Dedup.persistedCorpusIndex(spark, staticDir)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
       statePartitionsFor(spark, stagedBytes(s"$srcDir/$glob")).toString)
     val q = delta.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        Pipeline.dailyDeltaFrom(spark, staticDir, batch, Some(corpusIdx))
-          .write.mode("append").parquet(outDir)
-        ()
+        // each batch resolves the index afresh and probes it under the
+        // index lock, so a concurrent rebuild cannot swap its files
+        // mid-batch
+        Dedup.withCorpusIndex(spark, staticDir) { corpusIdx =>
+          Pipeline.dailyDeltaFrom(spark, staticDir, batch, Some(corpusIdx))
+            .write.mode("append").parquet(outDir)
+        }
       }
       .start()
     try q.processAllAvailable() finally {

@@ -632,8 +632,7 @@ object ScaleSoak {
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= 3)
-        .select(col("doc_id"), explode(array_distinct(expr(
-          "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")))
+        .select(col("doc_id"), explode(array_distinct(expr(Dedup.ShingleSql)))
           .as("shingle"))
     def run(label: String, df: => DataFrame, docs: Long, n: Int): Unit = {
       System.gc()
@@ -651,15 +650,15 @@ object ScaleSoak {
     // warm codegen/JIT on the small corpus before the measured points
     locally { val d = amplify(1)
       val docs = spark.read.parquet(s"$d/documents.parquet").count()
-      run("warmup_floor", Dedup.prodSigDfFrom(
+      run("warmup_floor", MinHashLsh.Prod.sigs(
         Dedup.shingleDfFrom(spark.read.parquet(s"$d/documents.parquet"))),
         docs, 1) }
     Seq(1, factor).distinct.foreach { n =>
       val dir = amplify(n)
       val docs = spark.read.parquet(s"$dir/documents.parquet").count()
-      run("floor", Dedup.prodSigDfFrom(Dedup.shingleDfFrom(
+      run("floor", MinHashLsh.Prod.sigs(Dedup.shingleDfFrom(
         spark.read.parquet(s"$dir/documents.parquet"))), docs, n)
-      run("nofloor", Dedup.prodSigDfFrom(noFloorShingles(dir)), docs, n)
+      run("nofloor", MinHashLsh.Prod.sigs(noFloorShingles(dir)), docs, n)
     }
     spark.stop()
   }
@@ -764,16 +763,13 @@ object ScaleSoak {
     // warm both paths once (codegen/JIT), then measure best-of-3
     def best3(f: => Long): Double =
       (1 to 3).map(_ => timed(f)._2).min
-    drain(Dedup.incrementalStatusAgainst(delta(5),
-      Dedup.persistedCorpusIndex(spark, dir)))
-    val tProbe20 = best3(drain(Dedup.incrementalStatusAgainst(delta(5),
-      Dedup.persistedCorpusIndex(spark, dir))))
-    val tProbe4 = best3(drain(Dedup.incrementalStatusAgainst(delta(25),
-      Dedup.persistedCorpusIndex(spark, dir))))
-    val tRederive20 = best3(drain(Dedup.incrementalStatusAgainst(delta(5),
-      Dedup.corpusBandIndex(spark, dir))))
-    val tRederive4 = best3(drain(Dedup.incrementalStatusAgainst(delta(25),
-      Dedup.corpusBandIndex(spark, dir))))
+    def probe(mod: Int, index: DataFrame): Long =
+      drain(MinHashLsh.Prod.probe(MinHashLsh.Prod.bandsOf(delta(mod)), index))
+    probe(5, Dedup.persistedCorpusIndex(spark, dir))
+    val tProbe20 = best3(probe(5, Dedup.persistedCorpusIndex(spark, dir)))
+    val tProbe4 = best3(probe(25, Dedup.persistedCorpusIndex(spark, dir)))
+    val tRederive20 = best3(probe(5, Dedup.corpusBandIndex(spark, dir)))
+    val tRederive4 = best3(probe(25, Dedup.corpusBandIndex(spark, dir)))
     println(f"SOAK_BANDINDEX dir=$dir build_once=$tBuild%.2f s " +
       f"probe_delta20pct=$tProbe20%.2f probe_delta4pct=$tProbe4%.2f " +
       f"rederive_delta20pct=$tRederive20%.2f rederive_delta4pct=$tRederive4%.2f")

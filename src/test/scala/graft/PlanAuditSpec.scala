@@ -195,7 +195,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("dedup_incremental_minhash: SMJ band probe, in-join threshold, partial best-match") {
     // The incremental probe must sort-merge the band index (a
     // broadcast of the linearly-growing corpus bands is the 100 TB
-    // scale-killer minhashPairsCore documents), evaluate the
+    // scale-killer MinHashLsh.pairs documents), evaluate the
     // codegen'd MatchCountF eq-count + >= threshold INSIDE the join
     // (pairs below the near-dup bar die before the distinct), and
     // plan best-match selection as a Partial+Final WindowGroupLimit
